@@ -18,8 +18,10 @@ import graft.functions.BflExpressions
   * | reference                      | here                                    |
   * |--------------------------------|-----------------------------------------|
   * | length-prefixed JSON log files | Parquet batches `records/batch_%09d`    |
-  * | offsets[] + partitionRefs[]    | `id` column + Parquet min/max row-group  |
-  * |                                | statistics (pruning replaces the index) |
+  * | offsets[] + partitionRefs[]    | manifest id ranges: each batch's        |
+  * |                                | firstId..lastId in meta.json picks the  |
+  * |                                | batches a read opens; Parquet row-group |
+  * |                                | min/max stats prune inside a batch      |
   * | global RWMutex single writer   | engine-level insert lock (single JVM);  |
   * |                                | cluster: one streaming sink per log     |
   * | fsnotify tail                  | Structured Streaming file source        |
@@ -56,16 +58,14 @@ final class Engine(
 
   private val recordsDir = Paths.get(dir, "records")
   private val metaPath = Paths.get(dir, "meta.json")
-  private val compactManifestPath = Paths.get(dir, "compact_manifest.json")
 
   Files.createDirectories(recordsDir)
 
   // ---- durable metadata (the reference's gob core dump analog) ----
   @volatile private var meta: Meta = loadMeta()
 
-  // replay a pre-manifest crash journal, adopt/garbage-collect the on-disk
-  // state against the manifest — BEFORE any reader can list the log
-  // (constructor runs before first use)
+  // adopt/garbage-collect the on-disk state against the manifest — BEFORE
+  // any reader can list the log (constructor runs before first use)
   reconcileLog()
 
   private def loadMeta(): Meta =
@@ -139,7 +139,8 @@ final class Engine(
           .write
           .mode(SaveMode.Append)
           .parquet(recordsDir.resolve(name).toString)
-        Some(name)
+        Some(Batch(name, meta.highWater, nextId - 1, rows.size.toLong,
+          dirBytes(recordsDir.resolve(name)), rows.map(_.getLong(1)).max))
       }
     val assigned = (meta.highWater until nextId).toList
     // manifest commit AFTER the dir is complete: a crash in between leaves
@@ -195,7 +196,7 @@ final class Engine(
         // high-water past the not-yet-visible shards and drops them when
         // they appear (observed as a 1-in-3 soak failure: 158/160 tail
         // records). Writing to a dot-prefixed dir (invisible to both the
-        // `batch_*` stream glob and listBatches) and renaming the DIRECTORY
+        // `batch_*` stream glob and the open-time reconcile) and renaming the DIRECTORY
         // is atomic on POSIX: a batch becomes visible with all its shards
         // or not at all. The driver path needs none of this — one part
         // file, one rename.
@@ -211,7 +212,7 @@ final class Engine(
       }
       meta = meta.copy(highWater = base + kept, batchSeq = meta.batchSeq + 1,
         batches =
-          if (kept > 0) meta.batches :+ f"batch_${meta.batchSeq}%09d"
+          if (kept > 0) meta.batches :+ describe(f"batch_${meta.batchSeq}%09d")
           else meta.batches)
       saveMeta()
       enforceRetention()
@@ -219,11 +220,15 @@ final class Engine(
     } finally { prepped.unpersist(blocking = false); () }
   }
 
-  /** All live records as a DataFrame (id, ts, doc), scan-ordered by id.
-    * The id filter replaces the reference's offsets index: Parquet row-group
-    * min/max stats prune batches a `leftOff` resume skips.
+  /** All live records as a DataFrame (id, ts, doc). */
+  def records(): DataFrame = recordsOver(_ => true)
+
+  /** Live records of the manifest batches `keep` selects by id range — a
+    * read opens only the batches that can hold its ids (the reference's
+    * offsets index at batch granularity); Parquet row-group min/max stats
+    * prune further inside them.
     */
-  def records(): DataFrame = {
+  private def recordsOver(keep: Batch => Boolean): DataFrame = {
     // Retention or compaction may remove a batch dir under a reader — the
     // reference's readers likewise skip removed partitions ("fRef == nil …
     // pass this offset", native.go:745-755). Two distinct race windows:
@@ -232,27 +237,30 @@ final class Engine(
     //     ignoreMissingFiles: a silent skip is correct for retention (rows
     //     legitimately evicted) but LOSES rows a compaction merely moved —
     //     throw-and-replan is correct for both.
-    //   - a batch dir vanishing BETWEEN listing and path resolution →
-    //     PATH_NOT_FOUND at planning, handled by re-listing (bounded).
-    // Explicit batch paths, NOT a glob: a data directory containing glob
-    // metacharacters ([ ] { } * ?) must not change what the scan matches.
+    //   - a batch dir vanishing BETWEEN lookup and path resolution →
+    //     PATH_NOT_FOUND at planning, handled by a fresh lookup (bounded).
     var attempt = 0
     while (attempt < 6) {
-      val batches = listBatches()
+      val batches = meta.batches.filter(keep)
       if (batches.isEmpty)
         return spark.createDataFrame(java.util.List.of[Row](), recordSchema)
-      try
-        return spark.read
-          .schema(recordSchema)
-          .parquet(batches.map(_.toString): _*)
+      try return readBatches(batches)
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage.contains("PATH_NOT_FOUND") =>
-          attempt += 1 // eviction won the race; re-list and retry
+          attempt += 1 // eviction won the race; look up again and retry
       }
     }
     throw new IllegalStateException("records(): path listing raced eviction 6 times")
   }
+
+  /** Explicit batch paths, NOT a glob: a data directory containing glob
+    * metacharacters ([ ] { } * ?) must not change what the scan matches.
+    */
+  private def readBatches(batches: Seq[Batch]): DataFrame =
+    spark.read.schema(recordSchema).parquet(batches.map(b => batchPath(b).toString): _*)
+
+  private def batchPath(b: Batch): Path = recordsDir.resolve(b.name)
 
   /** `/query` — filtered scan from `leftOff` (exclusive index semantics match
     * Fetch; "" = beginning, "latest" = last record only). Returns transformed
@@ -278,8 +286,12 @@ final class Engine(
     */
   private def baseFrom(leftOff: String): DataFrame = leftOff match {
     case "" | null => records()
-    case "latest"  => records().where(col("id") === meta.highWater - 1)
-    case s         => records().where(col("id") > s.toLong)
+    case "latest" =>
+      val last = meta.highWater - 1
+      recordsOver(_.lastId >= last).where(col("id") === last)
+    case s =>
+      val after = s.toLong
+      recordsOver(_.lastId > after).where(col("id") > after)
   }
 
   /** `/single` — point lookup by index; only the query's record-altering
@@ -290,7 +302,7 @@ final class Engine(
     val expanded = expand(queryStr)
     parseOrThrow(expanded) // validate
     val rows = retryOnEvictionRace {
-      records()
+      recordsOver(b => b.firstId <= index && index <= b.lastId)
         .where(col("id") === index)
         .select(BflExpressions.bflTransform(col("doc"), expanded))
         .collect()
@@ -320,11 +332,19 @@ final class Engine(
   /** `/fetch` scan — every SCANNED record in scan order as (id, doc-or-None):
     * doc is present (transformed) iff the record matches. The reference emits
     * a `/metadata` line per scanned offset (native.go:728-820), so the
-    * protocol server needs unmatched ids too. The scan stops at the record
-    * where the `limit`-th match lands (found first with a cheap pushdown-
-    * friendly matched-ids page); when fewer matches exist the scan runs to
-    * the log boundary, like the reference's offset loop. Returned iterator is
-    * partition-lazy (`toLocalIterator`) — the driver never holds the scan.
+    * protocol server needs unmatched ids too. The scan walks the manifest
+    * from `leftOff` in scan direction, one Spark job per step, and stops at
+    * the record where the `limit`-th match lands; when fewer matches exist
+    * it runs to the log boundary, like the reference's offset loop. A page
+    * that fits in the batch holding `leftOff` reads only that batch.
+    *
+    * Each step looks its batches up in the CURRENT manifest from the scan
+    * cursor, so a compaction swap or an eviction between steps costs nothing:
+    * moved ids are found in their new batch, evicted ids are gone. A step
+    * covers one batch at first, then as many rows as the scan has read so
+    * far (capped): a page near its start costs one or two jobs, and a long
+    * scan over a fragmented log costs O(log batches) jobs, not one per dir.
+    * The driver holds one step's scanned ids plus its matched docs.
     */
   def fetchScan(leftOff: Long, direction: Int, queryStr: String, limit: Int)
       : (Iterator[(Long, Option[String])], Long, Long) = {
@@ -334,24 +354,65 @@ final class Engine(
     // limit <= 0: the reference's `numberOfWritten >= _limit` check fires on
     // the first loop iteration — nothing is scanned (native.go:729-731)
     if (limit <= 0) return (Iterator.empty, total, meta.truncatedTimestamp)
-    // forward is INCLUSIVE of leftOff (offsets[leftOff:]), backward is
-    // exclusive (offsets[:leftOff]) — reference: native.go:700-706, pinned
-    // by the server fetch matrix (server_test.go:403-418)
-    val base =
-      if (direction < 0) records().where(col("id") < leftOff)
-      else records().where(col("id") >= leftOff)
-    val ordered = if (direction < 0) base.orderBy(col("id").desc) else base.orderBy(col("id"))
-    // scan end = id of the limit-th match; the id-only page keeps the BFL
-    // predicate + id range pushdown-eligible
-    val matchedIds = applyQueryNoLimit(ordered, expanded)
-      .select("id").limit(limit).collect().map(_.getLong(0))
-    val bounded =
-      if (matchedIds.length < limit) ordered // scan to the boundary
-      else if (direction < 0) ordered.where(col("id") >= matchedIds.last)
-      else ordered.where(col("id") <= matchedIds.last)
-    val it = flagsOver(bounded, expanded, q)
-      .toLocalIterator().asScala
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getString(1))))
+    val backward = direction < 0
+    // a forward scan ends at the call's high-water, not at later inserts
+    val end = meta.highWater
+    val it = new Iterator[(Long, Option[String])] {
+      // forward is INCLUSIVE of leftOff (offsets[leftOff:]), backward is
+      // exclusive (offsets[:leftOff]) — reference: native.go:700-706, pinned
+      // by the server fetch matrix (server_test.go:403-418). So the cursor
+      // is the next id to scan forward, or one past it backward.
+      private var cursor = if (backward) math.min(leftOff, end) else leftOff
+      private var matched = 0
+      private var readRows = 0L
+      private var step: Iterator[(Long, Option[String])] = Iterator.empty
+
+      def hasNext: Boolean = {
+        while (!step.hasNext && matched < limit && nextStep()) ()
+        step.hasNext
+      }
+
+      def next(): (Long, Option[String]) = {
+        if (!hasNext) throw new NoSuchElementException("fetch scan exhausted")
+        val r = step.next()
+        if (r._2.isDefined) matched += 1
+        r
+      }
+
+      /** Reads the next step's rows into `step`; false at the log boundary. */
+      private def nextStep(): Boolean = retryOnEvictionRace {
+        val bs = meta.batches
+        val head =
+          if (backward) bs.lastIndexWhere(_.firstId < cursor)
+          else bs.indexWhere(b => b.lastId >= cursor && b.firstId < end)
+        if (head < 0) false
+        else {
+          val budget = math.min(math.max(readRows, 1L), MaxStepRows)
+          val order = if (backward) (head to 0 by -1) else (head until bs.length)
+          var rows = 0L
+          val group = order.iterator.map(bs(_)).takeWhile { b =>
+            val take = rows == 0L || rows + b.rows <= budget
+            if (take) rows += b.rows
+            take
+          }.toVector
+          val (lo, hi) =
+            if (backward) (group.last.firstId, cursor - 1)
+            else (cursor, math.min(group.last.lastId, end - 1))
+          val ordered = readBatches(group)
+            .where(col("id").between(lo, hi))
+            .coalesce(1) // one task, so the running match count is global
+            .sortWithinPartitions(if (backward) col("id").desc else col("id"))
+          step = flagsOver(ordered, expanded, q).rdd
+            .mapPartitions(Engine.untilMatches(limit - matched))
+            .collect()
+            .iterator
+            .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getString(1))))
+          readRows += rows
+          cursor = if (backward) lo else hi + 1
+          true
+        }
+      }
+    }
     (it, total, meta.truncatedTimestamp)
   }
 
@@ -452,16 +513,9 @@ final class Engine(
     * restarting batchSeq.
     */
   def flush(): Unit = synchronized {
-    deleteBatches(listBatches())
+    deleteBatches(meta.batches.map(batchPath))
     gcTick(force = true)
-    // a pending legacy compaction journal would resurrect flushed records —
-    // drop it and any hidden (tmp/trash) dirs along with the live batches
-    Files.deleteIfExists(compactManifestPath)
-    Files.list(recordsDir).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith(".compact_") ||
-        p.getFileName.toString.startsWith(".trash_"))
-      .toSeq
-      .foreach(p => deleteBatches(Seq(p)))
+    deleteBatches(hiddenEntries()) // half-written tmp dirs go too
     meta = meta.copy(highWater = 0L, removedCount = 0L, truncatedTimestamp = 0L,
       batchSeq = 0L, batches = Vector.empty)
     saveMeta()
@@ -518,19 +572,6 @@ final class Engine(
   private def usesAlteringHelpers(q: Ast.Query): Boolean =
     Ast.usesAlteringHelpers(q)
 
-  /** The live log, from the MANIFEST — never the filesystem. A listing
-    * observes the batch set strictly before or strictly after a manifest
-    * commit, and every listed dir is guaranteed to exist for at least
-    * `gcGraceMs` after leaving the manifest, so a scan planned against this
-    * snapshot reads files that still exist even if compaction or retention
-    * replaces them mid-flight. (The old fs-listing design made every scan
-    * race the compactor's renames — routine FAILED_READ retries under
-    * steady ingest, livelock under churn.)
-    */
-  private def listBatches(): Seq[Path] = synchronized {
-    meta.batches.map(recordsDir.resolve(_))
-  }
-
   // ---- deferred GC of replaced/evicted dirs --------------------------------
   // (path, wall-clock deadline); insertion order = deadline order
   private val pendingDeletes =
@@ -564,34 +605,39 @@ final class Engine(
   private def dirBytes(p: Path): Long =
     Files.walk(p).iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
 
+  /** Dot-prefixed entries of the records dir: tmp dirs of rewrites and
+    * distributed inserts that never reached the manifest.
+    */
+  private def hiddenEntries(): Seq[Path] =
+    Files.list(recordsDir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("."))
+      .toSeq
+
   /** Size-bounded retention: delete oldest batches while the log exceeds the
     * byte budget; record the max ts evicted as truncatedTimestamp + advance
     * removedCount (reference: native.go:1046-1108 periodicPartitioner).
+    * Manifest arithmetic only: each entry's `bytes`, `rows` and `maxTs` were
+    * taken at its commit, so a pass walks no directory and runs no job.
     */
   private def enforceRetention(): Unit =
     meta.limitBytes.foreach { budget =>
-      var batches = listBatches()
-      var total = batches.map(dirBytes).sum
-      while (total > budget && batches.length > 1) {
-        val oldest = batches.head
-        // read evicted ids/ts for the truncation bookkeeping (the dir is
-        // still on disk — manifest entries always are)
-        val stats = spark.read.schema(recordSchema).parquet(oldest.toString)
-          .agg(max("ts").as("maxTs"), count(lit(1)).as("n"), max("id").as("maxId"))
-          .collect()(0)
-        val evictedN = stats.getLong(1)
-        val maxTs = if (stats.isNullAt(0)) 0L else stats.getLong(0)
-        // manifest commit is the eviction; the dir lingers through the GC
+      var live = meta.batches
+      var total = live.map(_.bytes).sum
+      while (total > budget && live.length > 1) {
+        total -= live.head.bytes
+        live = live.tail
+      }
+      val evicted = meta.batches.dropRight(live.length)
+      if (evicted.nonEmpty) {
+        // manifest commit is the eviction; the dirs linger through the GC
         // grace so scans planned before this commit finish cleanly
         meta = meta.copy(
-          removedCount = meta.removedCount + evictedN,
-          truncatedTimestamp = math.max(meta.truncatedTimestamp, maxTs + 1),
-          batches = meta.batches.filterNot(_ == oldest.getFileName.toString)
+          removedCount = meta.removedCount + evicted.map(_.rows).sum,
+          truncatedTimestamp = math.max(meta.truncatedTimestamp, evicted.map(_.maxTs).max + 1),
+          batches = live
         )
         saveMeta()
-        scheduleDelete(Seq(oldest))
-        batches = batches.tail
-        total = batches.map(dirBytes).sum
+        scheduleDelete(evicted.map(batchPath))
       }
     }
 
@@ -635,32 +681,32 @@ final class Engine(
     * region) and anything younger than minAge (grace for in-flight tail
     * micro-batches planned against the old paths).
     */
-  private def planCompactionGroup(): Option[Seq[Path]] = {
+  private def planCompactionGroup(): Option[Seq[Batch]] = {
     val now = System.currentTimeMillis()
-    val eligible = listBatches()
+    val eligible = meta.batches
       .dropRight(compactKeepRecent)
-      .filter(p => now - Files.getLastModifiedTime(p).toMillis >= compactMinAgeMs)
-    var group = List.empty[Path]
+      .filter(b => now - Files.getLastModifiedTime(batchPath(b)).toMillis >= compactMinAgeMs)
+    var group = List.empty[Batch]
     var bytes = 0L
-    for (p <- eligible) {
-      val b = dirBytes(p)
-      if (b >= compactTargetBytes || (bytes + b > compactTargetBytes && group.nonEmpty)) {
+    for (b <- eligible) {
+      if (b.bytes >= compactTargetBytes || (bytes + b.bytes > compactTargetBytes && group.nonEmpty)) {
         // run closes: a full-size dir, or the pack is full
         if (group.length >= compactMinRun) return Some(group.reverse)
         group = Nil
         bytes = 0L
       }
-      if (b < compactTargetBytes) { group ::= p; bytes += b }
+      if (b.bytes < compactTargetBytes) { group ::= b; bytes += b.bytes }
     }
     if (group.length >= compactMinRun) Some(group.reverse) else None
   }
 
   /** Rewrite `group` into one id-sorted consolidated dir under a FRESH name
     * (head member's number + a bumped `_cN` generation — sorts into exactly
-    * the head's position), then commit by patching the manifest. Members are
-    * never renamed or touched: in-flight scans planned against the old
-    * manifest keep reading them until the GC grace expires. Crash safety is
-    * positional, no journal needed:
+    * the head's position), then commit by patching the manifest with one
+    * entry spanning the members' id ranges. Members are never renamed or
+    * touched: in-flight scans planned against the old manifest keep reading
+    * them until the GC grace expires. Crash safety is positional, no
+    * journal needed:
     *   - before the manifest commit → the consolidated dir is an orphan the
     *     open-time reconcile deletes; members intact;
     *   - after the commit → members are off-manifest garbage the reconcile
@@ -668,13 +714,10 @@ final class Engine(
     * The expensive rewrite runs OUTSIDE the lock — ids are immutable and
     * members are frozen.
     */
-  private def compactGroup(group: Seq[Path]): Unit = {
-    val names = group.map(_.getFileName.toString)
-    val newName = Engine.bumpGeneration(names.head)
+  private def compactGroup(group: Seq[Batch]): Unit = {
+    val newName = Engine.bumpGeneration(group.head.name)
     val tmp = recordsDir.resolve(s".compact_$newName.tmp")
-    spark.read
-      .schema(recordSchema)
-      .parquet(group.map(_.toString): _*)
+    readBatches(group)
       .coalesce(1)                 // one output file — no shuffle
       .sortWithinPartitions("id")  // id-sorted → row-group min/max pruning intact
       .write
@@ -683,87 +726,94 @@ final class Engine(
     synchronized {
       // retention may have evicted members while we rewrote — abort stale
       // swaps (the group must still be one contiguous manifest run)
-      val idx = meta.batches.indexOf(names.head)
-      val stillLive = idx >= 0 &&
-        meta.batches.slice(idx, idx + names.length) == names
-      if (!stillLive) { deleteBatches(Seq(tmp)); return }
+      val idx = meta.batches.indexOf(group.head)
+      if (idx < 0 || meta.batches.slice(idx, idx + group.length) != group) {
+        deleteBatches(Seq(tmp)); return
+      }
       Files.move(tmp, recordsDir.resolve(newName),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      meta = meta.copy(batches = meta.batches.patch(idx, Seq(newName), names.length))
+      val merged = Batch(newName, group.head.firstId, group.last.lastId,
+        group.map(_.rows).sum, dirBytes(recordsDir.resolve(newName)), group.map(_.maxTs).max)
+      meta = meta.copy(batches = meta.batches.patch(idx, Seq(merged), group.length))
       saveMeta()
-      scheduleDelete(group)
+      scheduleDelete(group.map(batchPath))
     }
   }
 
-  /** Crash recovery for an interrupted swap. Invariants: the manifest is
-    * written only after the consolidated tmp is COMPLETE; the tmp is renamed
-    * to the final name only after every member is renamed to trash; trash is
-    * deleted only after the final rename. So with a manifest present:
-    * tmp still exists → finish the swap; tmp gone → the swap completed, only
-    * trash cleanup remains. Hidden dirs without a manifest are incomplete
-    * rewrites (data still lives in the original members) — deleted.
-    */
   /** Open-time reconcile of disk vs manifest.
     *
-    *   1. Replay a PRE-MANIFEST crash journal (compact_manifest.json from an
-    *      older engine version) so legacy logs open losslessly.
-    *   2. A legacy meta.json (no `batches` key) adopts the filesystem
+    *   1. A legacy meta.json (no `batches` key) adopts the filesystem
     *      listing as its first manifest.
-    *   3. Every on-disk batch dir NOT in the manifest is garbage by
+    *   2. Every on-disk batch dir NOT in the manifest is garbage by
     *      construction (an unacked crashed insert, or a replaced/evicted
     *      member whose deferred GC never ran) — deleted. This is also what
     *      makes a crashed mid-insert append safe: the unacked dir would
     *      otherwise collide with the next insert's batchSeq name.
-    *   4. Manifest entries whose dir vanished (manual deletion) are dropped.
-    *   5. Hidden (tmp/trash) dirs are incomplete rewrites — deleted.
+    *   3. Manifest entries whose dir vanished (manual deletion) are dropped.
+    *   4. Entries without id ranges (a legacy names-only manifest) get them
+    *      from their Parquet footers — driver-side, no Spark job.
+    *   5. Hidden (tmp) dirs are incomplete rewrites — deleted.
     */
   private def reconcileLog(): Unit = synchronized {
-    if (Files.exists(compactManifestPath)) {
-      // legacy journal: the old swap renamed members away and reused the
-      // head's name; finish or roll it back exactly as the old code did
-      val m = JsonTree.parse(
-        new String(Files.readAllBytes(compactManifestPath), StandardCharsets.UTF_8)
-      ).asInstanceOf[JsonTree.Obj]
-      val finalName = m.get("final").collect { case s: String => s }.get
-      val names = m.get("old").collect { case s: String => s }.get.split(',').toSeq
-      val tmp = recordsDir.resolve(s".compact_$finalName.tmp")
-      if (Files.exists(tmp)) {
-        names.foreach { n =>
-          val p = recordsDir.resolve(n)
-          if (Files.exists(p))
-            Files.move(p, recordsDir.resolve(s".trash_$n"),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
-        Files.move(tmp, recordsDir.resolve(finalName),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-      names.foreach(n => deleteBatches(Seq(recordsDir.resolve(s".trash_$n"))
-        .filter(Files.exists(_))))
-      Files.deleteIfExists(compactManifestPath)
-    }
-    def onDisk(): Seq[String] = Files.list(recordsDir).iterator().asScala
+    val onDisk = Files.list(recordsDir).iterator().asScala
       .map(_.getFileName.toString)
       .filter(_.startsWith("batch_"))
       .toSeq.sorted
-    if (!meta.batchesKnown) {
-      meta = meta.copy(batches = onDisk().toVector, batchesKnown = true)
+    val listed =
+      if (meta.batchesKnown) meta.batches
+      else onDisk.map(Batch.unranged).toVector
+    val names = listed.map(_.name).toSet
+    onDisk.filterNot(names).foreach(n => deleteBatches(Seq(recordsDir.resolve(n))))
+    val batches = listed
+      .filter(b => Files.exists(batchPath(b)))
+      .map(b => if (b.ranged) b else describe(b.name))
+      .filter(_.rows > 0)
+    if (!meta.batchesKnown || batches != meta.batches) {
+      meta = meta.copy(batches = batches, batchesKnown = true)
       saveMeta()
-    } else {
-      val live = meta.batches.toSet
-      onDisk().filterNot(live).foreach(n => deleteBatches(Seq(recordsDir.resolve(n))))
-      val missing = meta.batches.filterNot(n => Files.exists(recordsDir.resolve(n)))
-      if (missing.nonEmpty) {
-        meta = meta.copy(batches = meta.batches.filterNot(missing.toSet))
-        saveMeta()
-      }
     }
-    // hidden dirs (incomplete rewrites) are safe to drop
-    Files.list(recordsDir).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith(".compact_") ||
-        p.getFileName.toString.startsWith(".trash_") ||
-        p.getFileName.toString.endsWith(".tmp"))
-      .toSeq
-      .foreach(p => deleteBatches(Seq(p)))
+    deleteBatches(hiddenEntries())
+  }
+
+  /** A batch dir's manifest entry, from its Parquet footers: row counts and
+    * the `id`/`ts` column statistics every Spark-written file carries. Reads
+    * footers on the driver — no Spark job.
+    */
+  private def describe(name: String): Batch = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val p = recordsDir.resolve(name)
+    val conf = spark.sparkContext.hadoopConfiguration
+    var firstId = Long.MaxValue
+    var lastId = Long.MinValue
+    var rows = 0L
+    var maxTs = Long.MinValue
+    Files.list(p).iterator().asScala
+      .filter(f => f.getFileName.toString.endsWith(".parquet") &&
+        !f.getFileName.toString.startsWith("."))
+      .foreach { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri), conf))
+        try r.getFooter.getBlocks.asScala.filter(_.getRowCount > 0).foreach { block =>
+          rows += block.getRowCount
+          block.getColumns.asScala.foreach { c =>
+            val st = c.getStatistics
+            def stat(v: Any): Long = v match {
+              case l: java.lang.Long if st.hasNonNullValue => l
+              case _ => throw new IllegalStateException(
+                s"$f: no ${c.getPath.toDotString} statistics, cannot range the batch")
+            }
+            c.getPath.toDotString match {
+              case "id" =>
+                firstId = math.min(firstId, stat(st.genericGetMin))
+                lastId = math.max(lastId, stat(st.genericGetMax))
+              case "ts" => maxTs = math.max(maxTs, stat(st.genericGetMax))
+              case _    => ()
+            }
+          }
+        } finally r.close()
+      }
+    Batch(name, firstId, lastId, rows, dirBytes(p), maxTs)
   }
 
   // ---- background retention ticker --------------------------------------
@@ -772,8 +822,7 @@ final class Engine(
   // mutation-time enforcement alone leaves a pending budget breach (e.g. a
   // /limit issued after the last insert) unevicted until the next write.
   // The tick is a no-op without a limit (one volatile read); with one, the
-  // steady-state pass is a driver-side directory listing — no Spark job
-  // unless the budget is actually exceeded.
+  // pass is manifest arithmetic — no filesystem walk and no Spark job.
   private val tickerStop = new java.util.concurrent.atomic.AtomicBoolean(false)
   locally {
     val t = new Thread(() => {
@@ -870,6 +919,37 @@ object Engine {
     Row(id, ts, JsonTree.serialize(m))
   }
 
+  /** Rows a `/fetch` step may read at most, once its first batch is in. */
+  private val MaxStepRows = 1L << 18
+
+  /** Executor-side cut of a `/fetch` step: the rows of one scan-ordered
+    * partition up to and including its `n`-th match (doc column non-null).
+    */
+  private def untilMatches(n: Int): Iterator[Row] => Iterator[Row] = it =>
+    new Iterator[Row] {
+      private var matched = 0
+      def hasNext: Boolean = matched < n && it.hasNext
+      def next(): Row = {
+        val r = it.next()
+        if (!r.isNullAt(1)) matched += 1
+        r
+      }
+    }
+
+  /** One manifest entry: a live batch dir and what it holds — ids
+    * `firstId..lastId` (contiguous; batches never overlap and are kept in id
+    * order), its row count, its on-disk bytes and its largest `ts`, all taken
+    * once at commit. `rows < 0` marks an entry read from a names-only
+    * manifest whose ranges are not known yet.
+    */
+  final case class Batch(name: String, firstId: Long, lastId: Long, rows: Long,
+      bytes: Long, maxTs: Long) {
+    def ranged: Boolean = rows >= 0
+  }
+  object Batch {
+    def unranged(name: String): Batch = Batch(name, -1L, -1L, -1L, -1L, -1L)
+  }
+
   final case class FetchMeta(
       total: Long,
       numberOfWritten: Long,
@@ -889,14 +969,16 @@ object Engine {
       limitBytes: Option[Long] = None,
       insertionFilter: Option[String] = None,
       macros: Map[String, String] = Map.empty,
-      /** The LIVE batch manifest, in id (= name-sort) order. Readers list
-        * the log from here, never from the filesystem — so a dir leaving
-        * the manifest (compaction swap, retention evict) can stay on disk
-        * through a GC grace window without any reader ever seeing both the
-        * old and new copy. The manifest commit (atomic meta.json rename) IS
-        * the swap; on-disk dirs not in the manifest are garbage.
+      /** The LIVE batch manifest, in id (= name-sort) order. Readers find
+        * the batches that hold an id range here, never on the filesystem —
+        * so a dir leaving the manifest (compaction swap, retention evict)
+        * can stay on disk through a GC grace window without any reader ever
+        * seeing both the old and new copy. The manifest commit (atomic
+        * meta.json rename) IS the swap; on-disk dirs not in the manifest are
+        * garbage. Serialized as `batches` (the names) plus a parallel
+        * `ranges` array holding each entry's id range and sizes.
         */
-      batches: Vector[String] = Vector.empty,
+      batches: Vector[Batch] = Vector.empty,
       /** false only for a meta.json written before the manifest existed —
         * the open-time reconcile then adopts the filesystem listing once.
         * Never serialized.
@@ -914,9 +996,20 @@ object Engine {
       val mm = new JsonTree.Obj
       macros.foreach { case (k, v) => mm.put(k, v) }
       m.put("macros", mm)
-      val bb = new JsonTree.Arr
-      batches.foreach(bb += _)
-      m.put("batches", bb)
+      val names = new JsonTree.Arr
+      val ranges = new JsonTree.Arr
+      batches.foreach { b =>
+        names += b.name
+        val r = new JsonTree.Obj
+        r.put("firstId", b.firstId)
+        r.put("lastId", b.lastId)
+        r.put("rows", b.rows)
+        r.put("bytes", b.bytes)
+        r.put("maxTs", b.maxTs)
+        ranges += r
+      }
+      m.put("batches", names)
+      m.put("ranges", ranges)
       JsonTree.serialize(m)
     }
   }
@@ -924,15 +1017,32 @@ object Engine {
   object Meta {
     def fromJson(s: String): Meta = {
       val m = JsonTree.parse(s).asInstanceOf[JsonTree.Obj]
-      def longOf(k: String): Long = m.get(k) match {
+      def longOf(o: JsonTree.Obj, k: String): Long = o.get(k) match {
         case Some(l: Long) => l
         case _             => 0L
       }
+      val names = m.get("batches") match {
+        case Some(a: JsonTree.Arr) => a.toVector.collect { case s: String => s }
+        case _                     => Vector.empty
+      }
+      val ranges = m.get("ranges") match {
+        case Some(a: JsonTree.Arr) => a.toVector.collect { case o: JsonTree.Obj => o }
+        case _                     => Vector.empty
+      }
+      // a names-only manifest (or one whose ranges do not line up) is ranged
+      // from Parquet footers at open
+      val batches =
+        if (ranges.length == names.length)
+          names.zip(ranges).map { case (n, r) =>
+            Batch(n, longOf(r, "firstId"), longOf(r, "lastId"), longOf(r, "rows"),
+              longOf(r, "bytes"), longOf(r, "maxTs"))
+          }
+        else names.map(Batch.unranged)
       Meta(
-        highWater = longOf("highWater"),
-        batchSeq = longOf("batchSeq"),
-        removedCount = longOf("removedCount"),
-        truncatedTimestamp = longOf("truncatedTimestamp"),
+        highWater = longOf(m, "highWater"),
+        batchSeq = longOf(m, "batchSeq"),
+        removedCount = longOf(m, "removedCount"),
+        truncatedTimestamp = longOf(m, "truncatedTimestamp"),
         limitBytes = m.get("limitBytes").collect { case l: Long => l },
         insertionFilter = m.get("insertionFilter").collect { case s: String => s },
         macros = m.get("macros") match {
@@ -940,10 +1050,7 @@ object Engine {
             mm.collect { case (k, v: String) => k -> v }.toMap
           case _ => Map.empty
         },
-        batches = m.get("batches") match {
-          case Some(a: JsonTree.Arr) => a.toList.collect { case s: String => s }.toVector
-          case _                     => Vector.empty
-        },
+        batches = batches,
         batchesKnown = m.get("batches").isDefined
       )
     }

@@ -16,12 +16,18 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * | InsertData                    | insert / insertDistributed             |
   * | ValidateQuery / PrepareQuery  | validate / expandMacros                |
   * | StreamRecords                 | scanWithFlags + the streaming tail     |
-  * | RetrieveSingle                | single                                 |
-  * | Fetch                         | fetch / fetchScan                      |
+  * | RetrieveSingle                | single (the one batch covering the id) |
+  * | Fetch                         | fetch / fetchScan (batch by batch from |
+  * |                               | leftOff, stopping at the limit)        |
   * | ApplyMacro / GetMacros        | addMacro / macros                      |
   * | SetLimit / SetInsertionFilter | setLimit / setInsertionFilter          |
   * | Flush / Reset                 | flush / reset                          |
   * | HandleExit                    | close                                  |
+  *
+  * The reference's offsets[] + partitionRefs[] index (native.go:70-76) is
+  * the batch manifest in meta.json: each batch entry carries its id range,
+  * row count, bytes and max ts, so a read opens only the batches that can
+  * hold its ids.
   */
 trait Storage {
 

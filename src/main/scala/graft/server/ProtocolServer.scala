@@ -203,9 +203,7 @@ final class ProtocolServer(engine: Storage, port: Int, ingestShards: Int = 1,
               }
             case "QUERY" =>
               args += line
-              if (args.length == 2)
-
-                streamQuery(out, args(0), args(1))
+              if (args.length == 2) streamQuery(sock, out, args(0), args(1))
             case _ => ()
           }
         }
@@ -322,7 +320,8 @@ final class ProtocolServer(engine: Storage, port: Int, ingestShards: Int = 1,
     * engine; then a Structured Streaming tail keeps pushing new matches until
     * the client disconnects (reference: native.go:369-523).
     */
-  private def streamQuery(out: OutputStream, leftOff: String, query: String): Unit = {
+  private def streamQuery(sock: Socket, out: OutputStream, leftOff: String,
+      query: String): Unit = {
     var written = 0L
     // the tail must start after everything the HISTORY phase scanned —
     // matched or not — and never before leftOff (the client asked to skip
@@ -406,12 +405,20 @@ final class ProtocolServer(engine: Storage, port: Int, ingestShards: Int = 1,
         }
         last = math.max(last, hw)
       })
-    // hold the connection open until the client goes away (first failed
-    // write flips `dead`, like the reference's conn.Write error break) or
-    // the limit is reached
-    try while (!dead && !done && tailQ.isActive) Thread.sleep(100)
+    // hold the connection open until the client goes away or the limit is
+    // reached. A failed write flips `dead`, like the reference's conn.Write
+    // error break; a quiet tail writes nothing, so the client's EOF is read
+    // here too. Bytes sent after the query line are dropped — the reference
+    // never reads them.
+    sock.setSoTimeout(100)
+    val in = sock.getInputStream
+    val drop = new Array[Byte](4096)
+    try while (!dead && !done && tailQ.isActive) {
+      try if (in.read(drop) < 0) dead = true
+      catch { case _: java.net.SocketTimeoutException => () }
+    }
     catch { case _: Exception => () }
-    finally tailQ.stop()
+    finally { tailQ.stop(); sock.setSoTimeout(0) }
   }
 }
 

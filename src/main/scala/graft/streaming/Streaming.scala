@@ -159,18 +159,4 @@ object Streaming {
         }
       }
       .start()
-
-  /** Windowed event-time aggregation over the tail — beyond-reference
-    * extension: tumbling-window counts with a watermark for state cleanup.
-    */
-  def windowedCounts(
-      tailDf: DataFrame,
-      windowDur: String = "1 minute",
-      watermark: String = "2 minutes"
-  ): DataFrame =
-    tailDf
-      .withColumn("event_time", timestamp_millis(col("ts")))
-      .withWatermark("event_time", watermark)
-      .groupBy(window(col("event_time"), windowDur))
-      .agg(count(lit(1)).as("n"))
 }

@@ -181,30 +181,4 @@ class CompactionSpec extends AnyFunSuite {
       assert(e2.records().count() == 6, "records untouched by the rollback")
     } finally e2.close()
   }
-
-  test("crash recovery: manifest + tmp present but members not yet trashed → swap finishes") {
-    val dir = Files.createTempDirectory("graft-compact").toString
-    val e = compactingEngine(dir)
-    (0 until 6).foreach(i => e.insert(Seq(s"""{"n":$i}""")))
-    val before = e.records().orderBy("id").collect().map(_.getLong(0)).toSeq
-    e.close()
-    // build the consolidated tmp exactly as compactGroup would, then "crash"
-    // right after the manifest write (no renames yet)
-    val group = batchDirs(dir).take(4)
-    val finalName = group.head.getFileName.toString
-    val tmp = Paths.get(dir, "records", s".compact_$finalName.tmp")
-    spark.read.schema(e.records().schema).parquet(group.map(_.toString): _*)
-      .coalesce(1).sortWithinPartitions("id")
-      .write.parquet(tmp.toString)
-    val names = group.map(_.getFileName.toString)
-    Files.write(Paths.get(dir, "compact_manifest.json"),
-      s"""{"final":"$finalName","old":"${names.mkString(",")}"}""".getBytes)
-    val e2 = compactingEngine(dir)
-    try {
-      assert(!Files.exists(Paths.get(dir, "compact_manifest.json")))
-      assert(hiddenDirs(dir).isEmpty)
-      assert(batchDirs(dir).length == 3) // 1 consolidated + 2 untouched
-      assert(e2.records().orderBy("id").collect().map(_.getLong(0)).toSeq == before)
-    } finally e2.close()
-  }
 }

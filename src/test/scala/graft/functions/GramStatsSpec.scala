@@ -134,6 +134,16 @@ class GramStatsSpec extends AnyFunSuite {
     val want = relationalToken(df, 3)
       .orderBy("id", "n").collect().map(_.toSeq).toSeq
     assert(got == want)
+    // the char-gram expression over the same kind of codegen'd scan
+    val chars = spark.range(0, 50).select(col("id"),
+      concat(lit("abcab"), (col("id") % 7).cast("string")).as("ref"),
+      concat(lit("bcä"), (col("id") % 3).cast("string")).as("hyp"))
+    val gotChar = exprPerN(chars,
+      GramStatsExpr.charGramStats(col("ref"), col("hyp"), 4))
+      .orderBy("id", "n").collect().map(_.toSeq).toSeq
+    val wantChar = relationalChar(chars, 4)
+      .orderBy("id", "n").collect().map(_.toSeq).toSeq
+    assert(gotChar == wantChar)
   }
 
   test("null inputs contribute exactly the zero rows the sums ignore") {

@@ -253,6 +253,32 @@ class ProtocolServerSpec extends AnyFunSuite {
     }
   }
 
+  test("a closed /query stops its streaming tail") {
+    withServer { (engine, port) =>
+      engine.insert((0 until 6).map(i => s"""{"n":$i}"""))
+      val before = spark.streams.active.map(_.id).toSet
+      val (s, r, w) = connect(port)
+      s.setSoTimeout(30000)
+      w.println("/query")
+      w.println("")
+      w.println("")
+      // drain the history: one /metadata line per record, the last at leftOff 6
+      var l = r.readLine()
+      while (l != null && !l.contains("\"leftOff\":\"" + graft.engine.Engine.indexToId(6)))
+        l = r.readLine()
+      assert(l != null, "history ended early")
+      def added = spark.streams.active.map(_.id).filterNot(before)
+      val started = System.currentTimeMillis() + 30000
+      while (added.isEmpty && System.currentTimeMillis() < started) Thread.sleep(50)
+      assert(added.nonEmpty, "the live tail never started")
+      // no write ever fails on a quiet tail: only the client's EOF ends it
+      s.close()
+      val deadline = System.currentTimeMillis() + 10000
+      while (added.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(added.isEmpty, "the closed connection's streaming query is still running")
+    }
+  }
+
   test("query history far larger than one driver batch streams incrementally") {
     // the history phase must stream partition-lazily (toLocalIterator), not
     // collect(): the first record has to arrive while most of the scan is

@@ -6,7 +6,9 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 /** Optimization-round profiler: per query, wall seconds plus scheduler
   * counters (jobs, stages, tasks, summed task time, shuffle bytes) from a
   * SparkListener — separates fixed per-job/stage overhead from real
-  * compute so an optimization targets the right thing (guide §1).
+  * compute so an optimization targets the right thing (guide §1) — and the
+  * Catalyst analysis/optimization/planning times from the query's
+  * QueryPlanningTracker, which separate driver planning cost from execution.
   *
   * Usage: sbt "runMain graft.ProfStats <query> [query ...]"   (or ALL)
   */
@@ -50,7 +52,8 @@ object ProfStats {
     // discipline as Bench: a one-off GC/JIT spike after a heavy
     // predecessor otherwise reads as the query's own cost — observed 13.3s
     // vs 1.3s for asof_join in a full-board sweep)
-    println("query,wall_s,jobs,stages,tasks,task_time_s,gc_s,shuffle_read_mb,shuffle_write_mb")
+    println("query,wall_s,jobs,stages,tasks,task_time_s,gc_s,shuffle_read_mb,shuffle_write_mb," +
+      "analysis_ms,optimization_ms,planning_ms")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => System.err.println(s"[profstats] unknown query: $name")
@@ -64,15 +67,23 @@ object ProfStats {
               jobs.set(0); stages.set(0); tasks.set(0)
               taskMs.set(0); gcMs.set(0); shufRead.set(0); shufWrite.set(0)
               val t0 = System.nanoTime()
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+              val df = fn(spark, sfDir)
+              df.write.format("noop").mode("overwrite").save()
               val dt = (System.nanoTime() - t0) / 1e9
               Thread.sleep(200)
               (dt, jobs.get, stages.get, tasks.get, taskMs.get, gcMs.get,
-                shufRead.get, shufWrite.get)
+                shufRead.get, shufWrite.get, df)
             }.minBy(_._1)
-            val (dt, j, st, tk, tm, gc, sr, sw) = measured
+            val (dt, j, st, tk, tm, gc, sr, sw, df) = measured
+            // the write plans its own copy of the query, so plan `df` too,
+            // after the counters are read, for its Catalyst phase times
+            df.queryExecution.executedPlan
+            val phases = df.queryExecution.tracker.phases
+            def ms(k: String): Long =
+              phases.get(k).map(p => p.endTimeMs - p.startTimeMs).getOrElse(-1L)
             println(f"$name,$dt%.3f,$j,$st,$tk,${tm / 1000.0}%.2f,${gc / 1000.0}%.2f," +
-              f"${sr / 1048576.0}%.2f,${sw / 1048576.0}%.2f")
+              f"${sr / 1048576.0}%.2f,${sw / 1048576.0}%.2f," +
+              s"${ms("analysis")},${ms("optimization")},${ms("planning")}")
           } catch {
             case e: Exception =>
               System.err.println(s"[profstats] FAILED $name: ${e.getMessage}")

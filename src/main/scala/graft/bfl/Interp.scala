@@ -40,12 +40,6 @@ final class Interp(query: Query) {
     }
   }
 
-  def evalJson(json: String): Option[(Boolean, String)] =
-    JsonTree.tryParse(json).map { root =>
-      val t = eval(root)
-      (t, JsonTree.serialize(root))
-    }
-
   private[bfl] def evalValue(root: Any): (Any, Boolean) =
     query.expr match {
       case None => (true, false)

@@ -28,6 +28,12 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * the batch manifest in meta.json: each batch entry carries its id range,
   * row count, bytes and max ts, so a read opens only the batches that can
   * hold its ids.
+  *
+  * The wire benchmark's `TimedStorage` (`wirebench/.../Trace.scala`)
+  * implements every method here and forwards each to the engine, so
+  * removing a method the server never calls (`records`, `query`,
+  * `queryExpanded`, `fetch`) breaks the benchmark's build; it has to change
+  * together with the benchmark.
   */
 trait Storage {
 

@@ -130,28 +130,6 @@ case class MinHashSigsExpr(child: Expression, k: Int, ngram: Int)
   override def prettyName: String = "minhash_sigs"
 }
 
-/** Single signature column `min(md5(seed || ':' || shingle))` for one seed.
-  * Used to project k independent mh columns in ONE projection without a
-  * persisted intermediate: each column is its own expression evaluated once
-  * (k element_at references to one array expression would be re-inlined by
-  * CollapseProject and evaluated k times — no CSE for fallback expressions).
-  * Total md5 work equals the one-pass form; only tokenization repeats.
-  */
-case class MinHashOneExpr(child: Expression, seed: Int, ngram: Int)
-    extends UnaryExpression
-    with CodegenFallback {
-
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(
-      MinHashCore.minFor(MinHashCore.shingles(v.toString, ngram), seed))
-
-  override protected def withNewChildInternal(c: Expression): MinHashOneExpr =
-    copy(child = c)
-  override def prettyName: String = "minhash_one"
-}
-
 /** LSH band hashes in one pass: k signature minima grouped into k/rowsPerBand
   * bands, each band hashed as hex(md5(mh_i || "|" || ... || mh_j)) — exactly
   * `md5(concat_ws("|", mh...))` over [[MinHashSigsExpr]] columns, and exactly
@@ -219,10 +197,6 @@ object MinHashExpr {
   /** array<string> of k signature hex minima for a text column. */
   def minhashArray(text: Column, k: Int, ngram: Int = 3): Column =
     ColumnBridge.column(MinHashSigsExpr(ColumnBridge.expression(text), k, ngram))
-
-  /** One signature hex minimum (seed fixed) for a text column. */
-  def minhashOne(text: Column, seed: Int, ngram: Int = 3): Column =
-    ColumnBridge.column(MinHashOneExpr(ColumnBridge.expression(text), seed, ngram))
 
   /** array<string> of k/rowsPerBand LSH band hashes for a text column. */
   def bandArray(text: Column, k: Int, rowsPerBand: Int, ngram: Int = 3): Column =

@@ -285,12 +285,4 @@ object Privacy {
     df.select(col(idCol),
         explode(expr(s"regexp_extract_all($textCol, '\\\\d{13,19}', 0)")).as("candidate"))
       .select(col(idCol), col("candidate"), luhnValid(col("candidate")).as("luhn_valid"))
-
-  /** DuckDB mirror of [[luhnScan]]. */
-  def luhnScanSql(tbl: String, idCol: String, textCol: String): String =
-    s"""WITH cand AS (SELECT $idCol,
-           unnest(regexp_extract_all($textCol, '\\d{13,19}')) AS candidate
-         FROM $tbl)
-       SELECT $idCol, candidate, ${luhnValidSql("candidate")} AS luhn_valid
-       FROM cand"""
 }

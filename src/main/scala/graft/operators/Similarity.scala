@@ -572,24 +572,6 @@ object Similarity {
         1, nProbe),
       s => -s.getField("negcid"))
 
-  /** Multi-assigned IVF cells: every vector attached to its `nAssign`
-    * nearest trained centroids (cosine, ties to smallest cid) — the cohort
-    * builder for the density operators ([[lofOutliers]], [[dbscanClusters]],
-    * [[hubness]]). Multi-assignment is the standard cell-boundary fix: a
-    * point near a Voronoi face shares a cell with neighbors on BOTH sides.
-    * Candidate volume is Σ|cell|² ≈ nAssign²·n²/C — tune C with corpus
-    * size to hold cohorts bounded (C ∝ n keeps the join linear); at 100 TB
-    * the cells are the partition key, so cohort joins shuffle nothing that
-    * a cluster-partitioned table hasn't already co-located.
-    *
-    * Output: (idCol, cell) — nAssign rows per vector.
-    */
-  def ivfCells(emb: DataFrame, idCol: String, vecCol: String,
-      nCentroids: Int, kmeansIters: Int = 1, nAssign: Int = 2): DataFrame = {
-    val cents = centroids(emb, idCol, vecCol, nCentroids, kmeansIters)
-    emb.select(col(idCol), explode(probesExpr(cents, vecCol, nAssign)).as("cell"))
-  }
-
   /** Persist a trained IVF index ([[ivfTrained]]/[[ivfTrainedAuto]] `_2`) as
     * a CLUSTER-PARTITIONED parquet table — the real thing the
     * localCheckpoint in the build operators stands in for. One directory per
@@ -2089,18 +2071,8 @@ object Similarity {
       .select(col("_lof_id"), col("_lof_nbr"), col("_lof_d"))
   }
 
-  /** Shared DuckDB CTE chain ending in `knn(id, nbr, d)` — the SQL mirror
-    * of [[candidateKnn]]. */
-  private def knnSqlCtes(tbl: String, idCol: String, vecCol: String, k: Int,
-      signDims: Int, rowsPerBand: Int): String = {
-    val nBands = signDims / rowsPerBand
-    val bandRows = (0 until nBands).map { bi =>
-      s"SELECT $idCol AS id, $bi AS band_idx, ${bandValSql(vecCol, bi, rowsPerBand)} AS band_val FROM $tbl"
-    }.mkString(" UNION ALL ")
-    knnSqlCtesFrom(tbl, idCol, vecCol, k, bandRows)
-  }
-
-  /** [[knnSqlCtes]] over RANDOM-HYPERPLANE bands — the SQL mirror of
+  /** DuckDB CTE chain ending in `knn(id, nbr, d)` — the SQL mirror of
+    * [[candidateKnn]] over RANDOM-HYPERPLANE bands, i.e. of
     * [[planeBands]] (same seed-offset-per-band plane stream, same fold
     * order as [[lshSignatureSql]]). `rowsPerBand` must be the width
     * [[autoBandWidth]] picks for the table's row count — the mirror is
@@ -2112,11 +2084,6 @@ object Similarity {
       s"SELECT $idCol AS id, $bi AS band_idx, " +
         s"${lshSignatureSql(vecCol, rowsPerBand, dim, seed + 1000 * (bi + 1))} AS band_val FROM $tbl"
     }.mkString(" UNION ALL ")
-    knnSqlCtesFrom(tbl, idCol, vecCol, k, bandRows)
-  }
-
-  private def knnSqlCtesFrom(tbl: String, idCol: String, vecCol: String,
-      k: Int, bandRows: String): String = {
     val cos = (x: String, y: String) =>
       s"""(list_sum(list_transform(list_zip($x, $y), z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
          / (sqrt(list_sum(list_transform($x, z -> CAST(z AS DOUBLE) * CAST(z AS DOUBLE))))
@@ -2184,20 +2151,6 @@ object Similarity {
       emb, idCol, vecCol, queryIds, k, eps)
   }
 
-  /** DuckDB mirror of [[cohortCoverage]] (fixed coordinate-sign banding):
-    * brute exact distances for the panel, the same round(4)-then-rank
-    * tie-break, and the band equi-join cohort — the audit gate itself made
-    * oracle-exact. */
-  def cohortCoverageSql(tbl: String, idCol: String, vecCol: String,
-      queryIds: Seq[Long], k: Int, eps: Double,
-      signDims: Int = 16, rowsPerBand: Int = 4): String = {
-    val nBands = signDims / rowsPerBand
-    val bandRows = (0 until nBands).map { bi =>
-      s"SELECT $idCol AS id, $bi AS band_idx, ${bandValSql(vecCol, bi, rowsPerBand)} AS band_val FROM $tbl"
-    }.mkString(" UNION ALL ")
-    cohortCoverageSqlFrom(tbl, idCol, vecCol, queryIds, k, eps, bandRows)
-  }
-
   /** DuckDB mirror of [[cohortCoverageAuto]] — plane bands with the width
     * BAKED by the caller (`rowsPerBand` must equal `autoBandWidth(n)` for
     * the table's actual row count; a row-count drift breaks the hash loudly,
@@ -2210,11 +2163,6 @@ object Similarity {
       s"SELECT $idCol AS id, $bi AS band_idx, " +
         s"${lshSignatureSql(vecCol, rowsPerBand, dim, seed + 1000 * (bi + 1))} AS band_val FROM $tbl"
     }.mkString(" UNION ALL ")
-    cohortCoverageSqlFrom(tbl, idCol, vecCol, queryIds, k, eps, bandRows)
-  }
-
-  private def cohortCoverageSqlFrom(tbl: String, idCol: String, vecCol: String,
-      queryIds: Seq[Long], k: Int, eps: Double, bandRows: String): String = {
     val panel = queryIds.mkString(", ")
     val cos = (x: String, y: String) =>
       s"""(list_sum(list_transform(list_zip($x, $y), z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
@@ -2322,18 +2270,6 @@ object Similarity {
         (coalesce(col("in_degree"), lit(0L)) === 0L).as("is_antihub"))
       .orderBy("vec_id")
   }
-
-  /** DuckDB mirror of [[hubness]] — spec-internal like the operator. */
-  private[graft] def hubnessSql(tbl: String, idCol: String, vecCol: String, k: Int,
-      signDims: Int = 16, rowsPerBand: Int = 4): String =
-    s"""WITH ${knnSqlCtes(tbl, idCol, vecCol, k, signDims, rowsPerBand)},
-       indeg AS (SELECT nbr AS vec_id, COUNT(*) AS in_degree FROM knn GROUP BY nbr)
-       SELECT t.$idCol AS vec_id,
-         COALESCE(in_degree, 0) AS in_degree,
-         COALESCE(in_degree, 0) >= ${2 * k} AS is_hub,
-         COALESCE(in_degree, 0) = 0 AS is_antihub
-       FROM $tbl t LEFT JOIN indeg ON indeg.vec_id = t.$idCol
-       ORDER BY vec_id"""
 
   /** DuckDB mirror of [[hubnessAuto]] — `rowsPerBand` must equal
     * `autoBandWidth(n)` for the table's actual row count (static SQL bakes
@@ -2537,19 +2473,6 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** DuckDB mirror of [[dbscanClusters]] — same band values, same rounded
-    * eps test, recursive transitive closure in place of label propagation.
-    */
-  private[graft] def dbscanClustersSql(tbl: String, idCol: String, vecCol: String,
-      eps: Double, minPts: Int,
-      signDims: Int = 16, rowsPerBand: Int = 4): String = {
-    val nBands = signDims / rowsPerBand
-    val bandRows = (0 until nBands).map { bi =>
-      s"SELECT $idCol AS id, $bi AS band_idx, ${bandValSql(vecCol, bi, rowsPerBand)} AS band_val FROM $tbl"
-    }.mkString(" UNION ALL ")
-    dbscanSqlFrom(tbl, idCol, vecCol, eps, minPts, bandRows)
-  }
-
   /** DuckDB mirror of [[dbscanClustersAuto]] — hyperplane bands (see
     * [[hubnessAutoSql]] for the baked-width contract). */
   def dbscanClustersAutoSql(tbl: String, idCol: String, vecCol: String,
@@ -2559,11 +2482,6 @@ object Similarity {
       s"SELECT $idCol AS id, $bi AS band_idx, " +
         s"${lshSignatureSql(vecCol, rowsPerBand, dim, seed + 1000 * (bi + 1))} AS band_val FROM $tbl"
     }.mkString(" UNION ALL ")
-    dbscanSqlFrom(tbl, idCol, vecCol, eps, minPts, bandRows)
-  }
-
-  private def dbscanSqlFrom(tbl: String, idCol: String, vecCol: String,
-      eps: Double, minPts: Int, bandRows: String): String = {
     val cos = (x: String, y: String) =>
       s"""(list_sum(list_transform(list_zip($x, $y), z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
          / (sqrt(list_sum(list_transform($x, z -> CAST(z AS DOUBLE) * CAST(z AS DOUBLE))))
@@ -2603,13 +2521,6 @@ object Similarity {
        LEFT JOIN bordcl ON bordcl.id = t.$idCol
        ORDER BY vec_id"""
   }
-
-  /** DuckDB mirror of [[lofOutliers]] — same band values, same rounded-dist
-    * ranking, same DECIMAL folds, naive window in place of the salted top-k.
-    */
-  private[graft] def lofOutliersSql(tbl: String, idCol: String, vecCol: String, k: Int,
-      signDims: Int = 16, rowsPerBand: Int = 4): String =
-    s"WITH ${knnSqlCtes(tbl, idCol, vecCol, k, signDims, rowsPerBand)},\n$lofSqlTail"
 
   /** DuckDB mirror of [[lofOutliersAuto]] — hyperplane bands (see
     * [[hubnessAutoSql]] for the baked-width contract). */

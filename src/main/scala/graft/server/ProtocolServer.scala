@@ -19,7 +19,11 @@ import graft.streaming.Streaming
   * {current,total,numberOfWritten,leftOff,truncatedTimestamp,noMoreData};
   * `/query` streams history then keeps following new inserts (live tail).
   */
-final class ProtocolServer(engine: Storage, port: Int, ingestShards: Int = 1,
+final class ProtocolServer(engine: Storage, port: Int,
+    // the wire benchmark (wirebench/.../Main.scala) passes this positionally
+    // as `1`: removing it would silently rebind that argument to
+    // `maxLineChars` and still compile
+    ingestShards: Int = 1,
     maxLineChars: Int = ProtocolServer.MaxLineChars,
     bindAddr: String = "") {
 
@@ -194,12 +198,7 @@ final class ProtocolServer(engine: Storage, port: Int, ingestShards: Int = 1,
             case "FETCH" =>
               args += line
               if (args.length == 4) {
-                if (ProtocolServer.debugTrace)
-                  System.err.println(s"[psrv ${System.currentTimeMillis()}] handleFetch enter " +
-                    s"peer=${sock.getPort} args=$args")
                 handleFetch(out, args(0), args(1), args(2), args(3))
-                if (ProtocolServer.debugTrace)
-                  System.err.println(s"[psrv ${System.currentTimeMillis()}] handleFetch exit peer=${sock.getPort}")
               }
             case "QUERY" =>
               args += line
@@ -296,15 +295,9 @@ final class ProtocolServer(engine: Storage, port: Int, ingestShards: Int = 1,
       } catch {
         // ONLY retention races retry — a dead socket must propagate to the
         // connection handler, not trigger rescans against a closed client
-        case e if Engine.isEvictionRace(e) =>
-          attempts += 1
-          if (ProtocolServer.debugTrace)
-            System.err.println(s"[psrv ${System.currentTimeMillis()}] fetch race #$attempts: ${e.getMessage.take(120)}")
+        case e if Engine.isEvictionRace(e) => attempts += 1
       }
     }
-    if (ProtocolServer.debugTrace)
-      System.err.println(s"[psrv ${System.currentTimeMillis()}] fetch loop done " +
-        s"attempts=$attempts scanned=$scanned written=$written stop=$stop exhausted=$exhausted")
     // the reference's limit check sits at the TOP of the next iteration and
     // `return`s WITHOUT SendClose (native.go:729-731) — so a page that ends
     // by reaching the limit with offsets still unscanned sends no %quit%;
@@ -467,7 +460,4 @@ private[server] object GoAtoi {
 object ProtocolServer {
   /** Reference scanner-buffer cap (server/server.go:115): 209,715,200 B. */
   val MaxLineChars: Int = 209715200
-
-  /** stderr tracing of verb handling (diagnostics; off by default). */
-  val debugTrace: Boolean = sys.env.contains("SPARK_GRAFT_PROTO_TRACE")
 }

@@ -30,8 +30,10 @@ class QueryBoardSmokeSpec extends AnyFunSuite {
     }
   }
 
-  test("every oracleSql key has a queries entry and vice versa (non-SQL ops excepted)") {
-    val orphanOracles = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphanOracles.isEmpty, s"oracleSql without queries: $orphanOracles")
+  test("board rejects a duplicate query name") {
+    val q = SparkEntry.BoardQuery("dup", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.board(q, q.copy(oracleSql = "SELECT 2")))
+    assert(e.getMessage.contains("duplicate board query names: dup"))
   }
 }

@@ -23,19 +23,23 @@ class StreamingSpec extends AnyFunSuite {
     val engine = new Engine(spark, dir)
     engine.insert((0 until 10).map(i => s"""{"n":$i,"keep":${i % 2 == 0}}"""))
 
-    val seen = mutable.ArrayBuffer[(Long, String)]()
-    var lastLeftOff = -1L
-    val q = Streaming.startTail(spark, dir, """keep == true and redact("n")""",
+    val seen = mutable.ArrayBuffer[(Long, Option[String])]()
+    @volatile var lastLeftOff = -1L
+    val q = Streaming.startTailScan(spark, dir, """keep == true and redact("n")""",
       (rows, leftOff) => { seen.synchronized { seen ++= rows }; lastLeftOff = leftOff })
+    def matched = seen.synchronized(seen.collect { case (id, Some(doc)) => (id, doc) }.toList)
     try {
       q.processAllAvailable()
-      assert(seen.map(_._1).toSet == Set(0L, 2L, 4L, 6L, 8L))
-      assert(seen.forall(_._2.contains("\"n\":\"[REDACTED]\"")))
+      // every scanned record arrives; only matches carry a (redacted) doc
+      assert(seen.synchronized(seen.map(_._1).toList) == (0L until 10L))
+      assert(matched.map(_._1).toSet == Set(0L, 2L, 4L, 6L, 8L))
+      assert(matched.forall(_._2.contains("\"n\":\"[REDACTED]\"")))
 
       engine.insert((10 until 16).map(i => s"""{"n":$i,"keep":${i % 2 == 0}}"""))
       q.processAllAvailable()
-      assert(seen.map(_._1).toSet == Set(0L, 2L, 4L, 6L, 8L, 10L, 12L, 14L))
-      assert(lastLeftOff == 14L)
+      assert(matched.map(_._1).toSet == Set(0L, 2L, 4L, 6L, 8L, 10L, 12L, 14L))
+      assert(matched.forall(_._2.contains("\"n\":\"[REDACTED]\"")))
+      assert(lastLeftOff == 15L)
     } finally q.stop()
   }
 
@@ -84,45 +88,6 @@ class StreamingSpec extends AnyFunSuite {
       val closed = spark.sql("SELECT userId, startMs, endMs, nEvents FROM sessions_out")
         .as[(Long, Long, Long, Long)].collect()
       assert(closed.toSeq == Seq((1L, 1000L, 1500L, 2L)))
-    } finally q.stop()
-  }
-
-  test("streaming ingest drains a memory stream through the insertion filter") {
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-ingest").toString
-    val engine = new Engine(spark, dir)
-    engine.setInsertionFilter("""keep == true""")
-
-    implicit val sctx = spark.sqlContext
-    val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
-    val q = Streaming.startIngest(source.toDS(), engine)
-    try {
-      source.addData((0 until 10).map(i => s"""{"n":$i,"keep":${i % 2 == 0}}"""): _*)
-      q.processAllAvailable()
-      assert(engine.totalRecords == 5)
-      source.addData("""{"n":100,"keep":true}""", """{"n":101,"keep":false}""")
-      q.processAllAvailable()
-      assert(engine.totalRecords == 6)
-    } finally q.stop()
-  }
-
-  test("driver-path ingest (ingestShards = 1) keeps identical semantics") {
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-ingest-driver").toString
-    val engine = new Engine(spark, dir)
-    engine.setInsertionFilter("""keep == true""")
-
-    implicit val sctx = spark.sqlContext
-    val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
-    val q = Streaming.startIngest(source.toDS(), engine, ingestShards = 1)
-    try {
-      source.addData((0 until 10).map(i => s"""{"n":$i,"keep":${i % 2 == 0}}"""): _*)
-      q.processAllAvailable()
-      assert(engine.totalRecords == 5)
-      val rows = engine.records().orderBy("id").collect()
-      assert(rows.map(_.getLong(0)).toSeq == (0L until 5L))
     } finally q.stop()
   }
 
@@ -227,32 +192,6 @@ class StreamingSpec extends AnyFunSuite {
         .streamingQuery.lastExecution.executedPlan.toString
       assert(plan.contains("StreamingSymmetricHashJoin"),
         s"interval join not planned as bounded-state stream join:\n$plan")
-    } finally q.stop()
-  }
-
-  test("sharded streaming ingest: executor-side pipeline, same records and ids") {
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-ingest-sharded").toString
-    val engine = new Engine(spark, dir)
-    engine.setInsertionFilter("""keep == true""")
-
-    implicit val sctx = spark.sqlContext
-    val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
-    val q = Streaming.startIngest(source.toDS(), engine, ingestShards = 4)
-    try {
-      source.addData((0 until 200).map(i => s"""{"n":$i,"keep":${i % 2 == 0}}"""): _*)
-      q.processAllAvailable()
-      assert(engine.totalRecords == 100)
-      // contiguous global ids, injected 24-digit form, filter applied
-      val rows = engine.records().orderBy("id").collect()
-      assert(rows.map(_.getLong(0)).toSeq == (0L until 100L))
-      assert(rows.forall(r => r.getString(2).contains(
-        "\"id\":\"" + Engine.indexToId(r.getLong(0)) + "\"")))
-      assert(rows.forall(_.getString(2).contains("\"keep\":true")))
-      source.addData("""{"n":900,"keep":true}""")
-      q.processAllAvailable()
-      assert(engine.totalRecords == 101)
     } finally q.stop()
   }
 

@@ -24,7 +24,10 @@ import graft.functions.BflExpressions
   * |                                | min/max stats prune inside a batch      |
   * | global RWMutex single writer   | engine-level insert lock (single JVM);  |
   * |                                | cluster: one streaming sink per log     |
-  * | fsnotify tail                  | Structured Streaming file source        |
+  * | fsnotify tail, resumed from    | Structured Streaming source whose       |
+  * | the last offset served         | offset is the committed high-water id;  |
+  * |                                | a micro-batch reads only the batches    |
+  * |                                | past the previous one                   |
   * | gob core dump                  | meta.json (macros, filter, high-water)  |
   *
   * Records carry (id LONG, ts LONG epoch-millis, doc STRING); the stored doc
@@ -189,17 +192,13 @@ final class Engine(
         val rows = prepped
           .zipWithIndex()
           .map { case (doc, i) => Engine.buildRecordRow(doc, base + i, now) }
-        // ATOMIC batch publication: the N shard part-files are renamed into
-        // the output dir ONE AT A TIME during commitJob, and a live tail's
-        // file listing that catches mid-commit state sees only the
-        // later-committed shards — it then advances its already-scanned
-        // high-water past the not-yet-visible shards and drops them when
-        // they appear (observed as a 1-in-3 soak failure: 158/160 tail
-        // records). Writing to a dot-prefixed dir (invisible to both the
-        // `batch_*` stream glob and the open-time reconcile) and renaming the DIRECTORY
-        // is atomic on POSIX: a batch becomes visible with all its shards
-        // or not at all. The driver path needs none of this — one part
-        // file, one rename.
+        // The N shard part-files are renamed into the output dir ONE AT A
+        // TIME during commitJob, so a crash mid-commit would leave a
+        // `batch_*` dir holding only some shards. Writing to a dot-prefixed
+        // dir (which the open-time reconcile deletes as an incomplete
+        // write) and renaming the DIRECTORY is atomic on POSIX: a batch dir
+        // exists with all its shards or not at all. The driver path needs
+        // none of this — one part file, one rename.
         val tmp = recordsDir.resolve(f".batch_${meta.batchSeq}%09d.tmp")
         spark
           .createDataFrame(rows, recordSchema)
@@ -657,7 +656,7 @@ final class Engine(
     * Overlap-guarded: the rewrite runs outside the engine lock, so a manual
     * tick racing the ticker must not double-write the same tmp dir.
     */
-  private[engine] def compactionTick(): Unit =
+  private[graft] def compactionTick(): Unit =
     if (compactionInFlight.compareAndSet(false, true))
       try {
         // consume up to 4 runs per tick: one-run-per-second cannot keep up
@@ -919,8 +918,10 @@ object Engine {
     Row(id, ts, JsonTree.serialize(m))
   }
 
-  /** Rows a `/fetch` step may read at most, once its first batch is in. */
-  private val MaxStepRows = 1L << 18
+  /** Rows a `/fetch` step may read at most, once its first batch is in, and
+    * ids one micro-batch of a live tail spans at most.
+    */
+  private[graft] val MaxStepRows = 1L << 18
 
   /** Executor-side cut of a `/fetch` step: the rows of one scan-ordered
     * partition up to and including its `n`-th match (doc column non-null).

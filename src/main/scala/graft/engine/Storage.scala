@@ -40,7 +40,7 @@ trait Storage {
   /** Session queries run on; the streaming tail attaches here. */
   def spark: SparkSession
 
-  /** Log directory (the streaming tail's file-source root). */
+  /** Log directory; the streaming tail reads its manifest and batches. */
   def dir: String
 
   def insert(jsonDocs: Seq[String]): Seq[Long]

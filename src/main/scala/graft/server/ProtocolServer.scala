@@ -325,7 +325,7 @@ final class ProtocolServer(engine: Storage, port: Int,
       case "latest"  => engine.highWater - 2 // history = last record only
       case s         => s.toLong
     }
-    @volatile var last = math.max(histHighWater, leftOffSeed)
+    var last = math.max(histHighWater, leftOffSeed)
     @volatile var dead = false
     def sendSafe(msg: String): Unit =
       if (!dead) {
@@ -380,12 +380,12 @@ final class ProtocolServer(engine: Storage, port: Int,
       }
     }
     if (done || dead) return
-    // live tail (the streaming source replays the log; ids ≤ last are
-    // already-scanned history and skipped); same per-scanned-record
-    // metadata cadence as the history loop
-    val tailQ = Streaming.startTailScan(engine.spark, engine.dir, expanded,
-      (rows, hw) => {
-        rows.filter(_._1 > last).foreach { case (id, doc) =>
+    // live tail: the streaming source starts after everything the history
+    // scanned and reads each later record once, in id order; same
+    // per-scanned-record metadata cadence as the history loop
+    val tailQ = Streaming.startTailScan(engine.spark, engine.dir, expanded, last,
+      (rows, _) =>
+        rows.foreach { case (id, doc) =>
           if (!done) {
             doc.foreach { d =>
               sendSafe(d)
@@ -395,9 +395,7 @@ final class ProtocolServer(engine: Storage, port: Int,
               engine.truncatedTimestamp, noMore = false))
             if (limit != 0 && written >= limit) done = true
           }
-        }
-        last = math.max(last, hw)
-      })
+        })
     // hold the connection open until the client goes away or the limit is
     // reached. A failed write flips `dead`, like the reference's conn.Write
     // error break; a quiet tail writes nothing, so the client's EOF is read
@@ -410,8 +408,14 @@ final class ProtocolServer(engine: Storage, port: Int,
       try if (in.read(drop) < 0) dead = true
       catch { case _: java.net.SocketTimeoutException => () }
     }
-    catch { case _: Exception => () }
+    catch { case _: Exception => dead = true }
     finally { tailQ.stop(); sock.setSoTimeout(0) }
+    // a tail that stopped or failed by itself delivers nothing more: close
+    // the connection so the client sees EOF instead of a silent hang
+    if (!dead && !done) {
+      tailQ.exception.foreach(e => System.err.println(s"graft: /query live tail failed: $e"))
+      sock.close()
+    }
   }
 }
 

@@ -5,6 +5,7 @@ import java.net.Socket
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.bfl.JsonTree
 import graft.engine.Engine
 
 /** Wire-protocol e2e, modeled on the reference's server tests over net.Pipe
@@ -277,6 +278,85 @@ class ProtocolServerSpec extends AnyFunSuite {
       while (added.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
       assert(added.isEmpty, "the closed connection's streaming query is still running")
     }
+  }
+
+  test("a /query whose streaming tail stops closes the connection") {
+    withServer { (engine, port) =>
+      engine.insert((0 until 6).map(i => s"""{"n":$i}"""))
+      val before = spark.streams.active.map(_.id).toSet
+      val (s, r, w) = connect(port)
+      s.setSoTimeout(30000)
+      w.println("/query")
+      w.println("")
+      w.println("")
+      var l = r.readLine()
+      while (l != null && !l.contains("\"leftOff\":\"" + graft.engine.Engine.indexToId(6)))
+        l = r.readLine()
+      assert(l != null, "history ended early")
+      def added = spark.streams.active.filterNot(q => before(q.id))
+      val started = System.currentTimeMillis() + 30000
+      while (added.isEmpty && System.currentTimeMillis() < started) Thread.sleep(50)
+      assert(added.size == 1, "the live tail never started")
+      added.head.stop()
+      // the client sees EOF, not a connection that stays open with no tail
+      s.setSoTimeout(5000)
+      assert(r.readLine() == null)
+      s.close()
+    }
+  }
+
+  test("a live /query survives compaction and immediate GC: each match once, in order") {
+    spark.sparkContext.setLogLevel("WARN")
+    val dir = Files.createTempDirectory("graft-proto-compact").toString
+    // every dir is compactable at once, and replaced or evicted dirs are
+    // deleted at the commit, with no grace for a reader planned before it
+    val engine = new Engine(spark, dir, compactMinRun = 2, compactKeepRecent = 0,
+      compactMinAgeMs = 0L, compactInBackground = false, gcGraceMs = 0L)
+    val srv = new ProtocolServer(engine, 0, ingestShards)
+    val port = srv.start()
+    def docs(round: Int) =
+      (round * 20 until round * 20 + 20).map(i => s"""{"n":$i,"keep":${i % 2 == 0}}""")
+    try {
+      engine.insert(docs(0))
+      val before = spark.streams.active.map(_.id).toSet
+      val (s, r, w) = connect(port)
+      s.setSoTimeout(30000)
+      w.println("/query")
+      w.println("")
+      w.println("keep == true")
+      val got = scala.collection.mutable.ArrayBuffer[Long]()
+      /** reads records and progress lines up to the one for `lastId` */
+      def readThrough(lastId: Long): Unit = {
+        val end = "\"leftOff\":\"" + graft.engine.Engine.indexToId(lastId + 1)
+        var l = r.readLine()
+        while (l != null && !(l.startsWith("/metadata") && l.contains(end))) {
+          if (!l.startsWith("/metadata"))
+            got += JsonTree.parse(l).asInstanceOf[JsonTree.Obj]("n").asInstanceOf[Long]
+          l = r.readLine()
+        }
+        assert(l != null, s"the stream ended before id $lastId")
+      }
+      readThrough(19)
+      // compaction right behind each insert: the tail may be planning or
+      // reading the new dir when it is rewritten and deleted
+      (1 to 6).foreach { round =>
+        engine.insert(docs(round))
+        engine.compactionTick()
+        readThrough(round * 20L + 19)
+      }
+      // retention evicts the delivered, compacted batch at the next insert
+      engine.setLimit(1)
+      (7 to 8).foreach { round =>
+        engine.insert(docs(round))
+        readThrough(round * 20L + 19)
+        engine.compactionTick()
+      }
+      assert(engine.totalRecords == 20)
+      assert(got.toList == (0L until 180L by 2L), "a match was lost, repeated or reordered")
+      val tails = spark.streams.active.filterNot(q => before(q.id))
+      assert(tails.size == 1 && tails.head.isActive, "the live tail died")
+      s.close()
+    } finally { srv.stop(); engine.close() }
   }
 
   test("query history far larger than one driver batch streams incrementally") {

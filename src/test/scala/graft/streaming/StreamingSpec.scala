@@ -1,7 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Engine
@@ -25,7 +30,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val seen = mutable.ArrayBuffer[(Long, Option[String])]()
     @volatile var lastLeftOff = -1L
-    val q = Streaming.startTailScan(spark, dir, """keep == true and redact("n")""",
+    val q = Streaming.startTailScan(spark, dir, """keep == true and redact("n")""", -1L,
       (rows, leftOff) => { seen.synchronized { seen ++= rows }; lastLeftOff = leftOff })
     def matched = seen.synchronized(seen.collect { case (id, Some(doc)) => (id, doc) }.toList)
     try {
@@ -51,7 +56,7 @@ class StreamingSpec extends AnyFunSuite {
     engine.insert((0 until 5000).map(i => s"""{"n":$i,"keep":true}"""))
 
     val chunks = mutable.ArrayBuffer[Seq[(Long, Option[String])]]()
-    val q = Streaming.startTailScan(spark, dir, """keep == true""",
+    val q = Streaming.startTailScan(spark, dir, """keep == true""", -1L,
       (rows, _) => chunks.synchronized { chunks += rows },
       maxRowsPerChunk = 256)
     try {
@@ -67,6 +72,118 @@ class StreamingSpec extends AnyFunSuite {
       assert(ids == ids.sorted && ids.distinct.size == ids.size, "ids out of order or duplicated")
       assert(ids.size == 5000 && ids.head == 0L && ids.last == 4999L)
     } finally q.stop()
+  }
+
+  /** Records a query's micro-batch progress (`numInputRows` is what its
+    * source read) and the Spark jobs its micro-batches run.
+    */
+  private final class TailMeter {
+    private val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    private val jobQueries = new ConcurrentLinkedQueue[String]()
+    private val Marker = "tail-meter-marker"
+    private val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    @volatile private var markerDone = false
+    private val streams = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        progress.add(e.progress); ()
+      }
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    private val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.job.description").contains(Marker)) markerJobs.add(e.jobId)
+        else prop("sql.streaming.queryId").foreach(jobQueries.add)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) markerDone = true
+    }
+    spark.streams.addListener(streams)
+    spark.sparkContext.addSparkListener(jobs)
+
+    /** Rows read per non-empty micro-batch of `q`, once the listeners have
+      * caught up with its last progress, and the jobs `q` ran.
+      */
+    def of(q: StreamingQuery): (Seq[Long], Int) = {
+      val last = q.lastProgress.batchId
+      def mine = progress.asScala.filter(_.id == q.id).toSeq
+      val deadline = System.currentTimeMillis() + 10000
+      while (!mine.exists(_.batchId == last) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      // job events travel on another listener queue: a job of our own, run
+      // after the query's, ends only once that queue has passed them
+      markerDone = false
+      spark.sparkContext.setJobDescription(Marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      while (!markerDone && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      (mine.map(_.numInputRows).filter(_ > 0),
+        jobQueries.asScala.count(_ == q.id.toString))
+    }
+
+    def stop(): Unit = {
+      spark.streams.removeListener(streams)
+      spark.sparkContext.removeSparkListener(jobs)
+    }
+  }
+
+  test("tail reads only new ids: none of the preload, each later record once, one job per batch") {
+    spark.sparkContext.setLogLevel("WARN")
+    val dir = Files.createTempDirectory("graft-tail-reads").toString
+    val engine = new Engine(spark, dir, compactMinRun = 2, compactKeepRecent = 0,
+      compactMinAgeMs = 0L, compactInBackground = false, gcGraceMs = 0L)
+    def docs(from: Int, n: Int) = (from until from + n).map(i => s"""{"n":$i,"keep":${i % 3 == 0}}""")
+    val k = 600
+    (0 until 3).foreach(b => engine.insert(docs(b * 200, 200)))
+    val meter = new TailMeter
+    val seen = mutable.ArrayBuffer[Long]()
+    // started after the preload, as the server starts a tail after its history
+    val q = Streaming.startTailScan(spark, dir, "keep == true", k - 1L,
+      (rows, _) => seen.synchronized { seen ++= rows.map(_._1) })
+    try {
+      q.processAllAvailable()
+      assert(seen.synchronized(seen.isEmpty), "the tail delivered preloaded records")
+      var next = k
+      def grow(n: Int): Unit = { engine.insert(docs(next, n)); next += n; q.processAllAvailable() }
+      grow(50)
+      grow(70)
+      // every dir so far, read or not by the tail, becomes one batch; the
+      // replaced dirs are deleted at once
+      engine.compactionTick()
+      assert(Files.list(Paths.get(dir, "records")).count() == 1, "compaction did not run")
+      grow(40)
+      grow(40)
+      val m = next - k
+      val (batchRows, jobs) = meter.of(q)
+      assert(seen.synchronized(seen.toList) == (k.toLong until next.toLong))
+      assert(batchRows.sum == m, s"rows read per micro-batch: $batchRows")
+      assert(batchRows.nonEmpty && jobs == batchRows.size,
+        s"${batchRows.size} micro-batches ran $jobs jobs")
+      assert(q.isActive)
+    } finally { q.stop(); meter.stop(); engine.close() }
+  }
+
+  test("a multi-part batch from a distributed insert reaches the tail in id order") {
+    spark.sparkContext.setLogLevel("WARN")
+    val dir = Files.createTempDirectory("graft-tail-parts").toString
+    val engine = new Engine(spark, dir)
+    engine.insert(Seq("""{"n":0}"""))
+    val seen = mutable.ArrayBuffer[Long]()
+    val q = Streaming.startTailScan(spark, dir, "n >= 0", 0L,
+      (rows, _) => seen.synchronized { seen ++= rows.map(_._1) })
+    try {
+      q.processAllAvailable()
+      val lines = spark.createDataset((1 to 400).map(i => s"""{"n":$i}"""))(Encoders.STRING)
+        .repartition(4)
+      assert(engine.insertDistributed(lines, writeShards = 4) == (1L to 400L))
+      val parts = Files.list(Paths.get(dir, "records", "batch_000000001")).iterator().asScala
+        .count(_.getFileName.toString.endsWith(".parquet"))
+      assert(parts > 1, s"the batch was written as $parts part file(s)")
+      q.processAllAvailable()
+      val ids = seen.synchronized(seen.toList)
+      assert(ids == (1L to 400L), "ids missing, repeated or out of order")
+    } finally { q.stop(); engine.close() }
   }
 
   test("stateful sessionization closes sessions on gap and carries state across batches") {

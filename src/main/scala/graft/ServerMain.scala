@@ -19,11 +19,9 @@ package graft
   *     reference's `log.Panicf("Unknown storage driver")`
   *   - `-storage-args` driver argument: the log directory (default
   *     ./graft-data)
-  *   - `-ingest-shards` (extension) >1 routes /insert through the
-  *     executor-side distributed pipeline
   *
   * Legacy positional form stays supported:
-  *   `sbt "runMain graft.ServerMain [port] [dataDir] [ingestShards]"`
+  *   `sbt "runMain graft.ServerMain [port] [dataDir]"`
   */
 object ServerMain {
 
@@ -36,8 +34,7 @@ object ServerMain {
       version: Boolean = false,
       persistent: Boolean = false,
       storage: String = "parquet",
-      dataDir: String = "graft-data",
-      ingestShards: Int = 1
+      dataDir: String = "graft-data"
   )
 
   /** Go-flag-style parser (`-name value`, bools need no value; `-name=value`
@@ -46,10 +43,10 @@ object ServerMain {
   def parseArgs(args: Seq[String]): Either[String, Config] = {
     if (args.isEmpty) return Right(Config())
     if (!args.head.startsWith("-")) {
+      if (args.length > 2) return Left(s"too many positional args: ${args.mkString(" ")}")
       return try Right(Config(
-        port = args.lift(0).map(_.toInt).getOrElse(9099),
-        dataDir = args.lift(1).getOrElse("graft-data"),
-        ingestShards = args.lift(2).map(_.toInt).getOrElse(1)
+        port = args.head.toInt,
+        dataDir = args.lift(1).getOrElse("graft-data")
       )) catch { case e: NumberFormatException => Left(s"bad positional arg: ${e.getMessage}") }
     }
     var c = Config()
@@ -74,8 +71,6 @@ object ServerMain {
         case "-persistent" | "--persistent" => Right(c.copy(persistent = inline.forall(_ == "true")))
         case "-storage" | "--storage" => value().map(v => c.copy(storage = v))
         case "-storage-args" | "--storage-args" => value().map(v => c.copy(dataDir = v))
-        case "-ingest-shards" | "--ingest-shards" => value().flatMap(v =>
-          v.toIntOption.toRight(s"invalid value \"$v\" for flag $name").map(n => c.copy(ingestShards = n)))
         case other => Left(s"flag provided but not defined: $other")
       }
       res match {
@@ -111,11 +106,10 @@ object ServerMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel(if (cfg.debug) "INFO" else "WARN")
     val eng: graft.engine.Storage = new graft.engine.Engine(spark, cfg.dataDir)
-    val srv = new graft.server.ProtocolServer(eng, cfg.port, cfg.ingestShards,
-      bindAddr = cfg.addr)
+    val srv = new graft.server.ProtocolServer(eng, cfg.port, bindAddr = cfg.addr)
     val bound = srv.start()
     println(s"graft $Version listening on ${cfg.addr}:$bound " +
-      s"(data: ${cfg.dataDir}, storage: ${cfg.storage}, ingestShards: ${cfg.ingestShards})")
+      s"(data: ${cfg.dataDir}, storage: ${cfg.storage})")
     // the accept loop runs on a daemon thread; block the main thread like
     // the reference's server main
     Thread.currentThread().join()

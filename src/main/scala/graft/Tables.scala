@@ -91,13 +91,10 @@ object Sessions {
       // converter no matter what encodingFormat says, so state classes must
       // avoid non-string-key Maps — StreamPsi/StreamQuantile/StreamAci carry
       // their histograms as key-sorted parallel arrays for this reason.
-      // the engine's retention deletes batch files under live readers (the
-      // reference's readers skip removed partitions); Spark consults this
-      // SQL conf — NOT the per-relation option — on several read paths, so
-      // set it session-wide (static test data never loses files, no effect
-      // elsewhere). The engine's retry/resume layers cover the windows the
-      // conf can't (planning-time PATH_NOT_FOUND, footer-open wraps).
-      .config("spark.sql.files.ignoreMissingFiles", "true")
+      // a missing file fails a read (Spark's default): a batch file the
+      // engine's retention or compaction deletes under a reader makes the
+      // engine replan (Engine.readBatches), where a skip would silently
+      // drop rows a compaction only moved
       // plan audits read PushedFilters from plan strings; don't truncate
       .config("spark.sql.debug.maxToStringFields", "200")
       .config("spark.sql.maxMetadataStringLength", "10000")

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -65,15 +65,11 @@ final class Engine(
   Files.createDirectories(recordsDir)
 
   // ---- durable metadata (the reference's gob core dump analog) ----
-  @volatile private var meta: Meta = loadMeta()
+  @volatile private var meta: Meta = Meta.load(dir)
 
   // adopt/garbage-collect the on-disk state against the manifest — BEFORE
   // any reader can list the log (constructor runs before first use)
   reconcileLog()
-
-  private def loadMeta(): Meta =
-    if (Files.exists(metaPath)) Meta.fromJson(new String(Files.readAllBytes(metaPath), StandardCharsets.UTF_8))
-    else Meta()
 
   /** Atomic: the manifest inside meta.json is the log's commit point, so a
     * torn write must be impossible, not just unlikely.
@@ -86,12 +82,6 @@ final class Engine(
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     ()
   }
-
-  private val recordSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("ts", LongType, nullable = false),
-    StructField("doc", StringType, nullable = false)
-  ))
 
   // ------------------------------------------------------------------
   // commands (reference: server/lib/structs.go:60-72 dispatch surface)
@@ -155,69 +145,9 @@ final class Engine(
     assigned
   }
 
-  /** `/insert` at scale: the same semantics as [[insert]] — insertion filter
-    * (drop + transform), contiguous ids in arrival order, 24-digit id
-    * injection, one Parquet batch append — but EXECUTOR-side. The driver
-    * path parses and filters every document on one thread (the round-2
-    * measured ~24k rec/s ingest ceiling); here the micro-batch is processed
-    * as a distributed two-pass pipeline:
-    *
-    *   1. parse + insertion-filter + transform in parallel on executors
-    *      (order-preserving; rejected lines consume no id);
-    *   2. contiguous id assignment via `zipWithIndex` (the standard
-    *      distributed rank idiom: one count job over the cached survivors,
-    *      then per-partition offsets), id injected + serialized executor-side;
-    *   3. `writeShards` Parquet part-files written in parallel into ONE
-    *      batch directory (each part covers a contiguous id range, so
-    *      row-group min/max pruning behaves exactly like the driver path).
-    *
-    * The engine lock is held throughout: one writer per log, like the
-    * reference's storage mutex — parallelism comes from WITHIN the batch.
-    * At cluster scale this is the sink of a Structured Streaming ingest:
-    * shard ↔ Kafka partition, id reservation ↔ log offset range.
-    */
-  def insertDistributed(lines: org.apache.spark.sql.Dataset[String],
-      writeShards: Int = 4): Seq[Long] = synchronized {
-    import org.apache.spark.storage.StorageLevel
-    val filterQ: Option[Ast.Query] =
-      meta.insertionFilter.map(q => parseOrThrow(expand(q)))
-    val prepped = lines.rdd
-      .mapPartitions(Engine.prepPartition(filterQ))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val kept = prepped.count()
-      val base = meta.highWater
-      if (kept > 0) {
-        val now = System.currentTimeMillis()
-        val rows = prepped
-          .zipWithIndex()
-          .map { case (doc, i) => Engine.buildRecordRow(doc, base + i, now) }
-        // The N shard part-files are renamed into the output dir ONE AT A
-        // TIME during commitJob, so a crash mid-commit would leave a
-        // `batch_*` dir holding only some shards. Writing to a dot-prefixed
-        // dir (which the open-time reconcile deletes as an incomplete
-        // write) and renaming the DIRECTORY is atomic on POSIX: a batch dir
-        // exists with all its shards or not at all. The driver path needs
-        // none of this — one part file, one rename.
-        val tmp = recordsDir.resolve(f".batch_${meta.batchSeq}%09d.tmp")
-        spark
-          .createDataFrame(rows, recordSchema)
-          .coalesce(math.max(1, writeShards))
-          .write
-          .mode(SaveMode.Overwrite) // clobber a stale tmp from a crashed run
-          .parquet(tmp.toString)
-        Files.move(tmp, recordsDir.resolve(f"batch_${meta.batchSeq}%09d"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-      meta = meta.copy(highWater = base + kept, batchSeq = meta.batchSeq + 1,
-        batches =
-          if (kept > 0) meta.batches :+ describe(f"batch_${meta.batchSeq}%09d")
-          else meta.batches)
-      saveMeta()
-      enforceRetention()
-      (base until base + kept).toList
-    } finally { prepped.unpersist(blocking = false); () }
-  }
+  /** [[insert]] of the collected `lines`; `writeShards` is ignored. */
+  def insertDistributed(lines: Dataset[String], writeShards: Int): Seq[Long] =
+    insert(lines.collect().toSeq)
 
   /** All live records as a DataFrame (id, ts, doc). */
   def records(): DataFrame = recordsOver(_ => true)
@@ -227,37 +157,8 @@ final class Engine(
     * offsets index at batch granularity); Parquet row-group min/max stats
     * prune further inside them.
     */
-  private def recordsOver(keep: Batch => Boolean): DataFrame = {
-    // Retention or compaction may remove a batch dir under a reader — the
-    // reference's readers likewise skip removed partitions ("fRef == nil …
-    // pass this offset", native.go:745-755). Two distinct race windows:
-    //   - files vanishing AFTER planning → FAILED_READ_FILE at execution;
-    //     every materialization site replans via retryOnEvictionRace. NOT
-    //     ignoreMissingFiles: a silent skip is correct for retention (rows
-    //     legitimately evicted) but LOSES rows a compaction merely moved —
-    //     throw-and-replan is correct for both.
-    //   - a batch dir vanishing BETWEEN lookup and path resolution →
-    //     PATH_NOT_FOUND at planning, handled by a fresh lookup (bounded).
-    var attempt = 0
-    while (attempt < 6) {
-      val batches = meta.batches.filter(keep)
-      if (batches.isEmpty)
-        return spark.createDataFrame(java.util.List.of[Row](), recordSchema)
-      try return readBatches(batches)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") =>
-          attempt += 1 // eviction won the race; look up again and retry
-      }
-    }
-    throw new IllegalStateException("records(): path listing raced eviction 6 times")
-  }
-
-  /** Explicit batch paths, NOT a glob: a data directory containing glob
-    * metacharacters ([ ] { } * ?) must not change what the scan matches.
-    */
-  private def readBatches(batches: Seq[Batch]): DataFrame =
-    spark.read.schema(recordSchema).parquet(batches.map(b => batchPath(b).toString): _*)
+  private def recordsOver(keep: Batch => Boolean): DataFrame =
+    readBatches(spark, dir, meta.batches.filter(keep))
 
   private def batchPath(b: Batch): Path = recordsDir.resolve(b.name)
 
@@ -307,25 +208,6 @@ final class Engine(
         .collect()
     }
     rows.headOption.map(_.getString(0))
-  }
-
-  /** Retry a materialized read that lost the race against retention: the
-    * parquet FOOTER open wraps its FileNotFoundException in ways
-    * `ignoreMissingFiles` cannot intercept (FAILED_READ_FILE.NO_HINT), so
-    * the read is re-planned against a fresh batch listing — the exact
-    * analog of the reference reader skipping a removed partition and
-    * carrying on (native.go:745-755). Bounded: a persistent failure is a
-    * real error, not a race.
-    */
-  private[engine] def retryOnEvictionRace[T](f: => T): T = {
-    var attempt = 0
-    while (true) {
-      try return f
-      catch {
-        case e: Exception if attempt < 5 && Engine.isEvictionRace(e) => attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
   }
 
   /** `/fetch` scan — every SCANNED record in scan order as (id, doc-or-None):
@@ -397,7 +279,7 @@ final class Engine(
           val (lo, hi) =
             if (backward) (group.last.firstId, cursor - 1)
             else (cursor, math.min(group.last.lastId, end - 1))
-          val ordered = readBatches(group)
+          val ordered = readBatches(spark, dir, group)
             .where(col("id").between(lo, hi))
             .coalesce(1) // one task, so the running match count is global
             .sortWithinPartitions(if (backward) col("id").desc else col("id"))
@@ -514,7 +396,7 @@ final class Engine(
   def flush(): Unit = synchronized {
     deleteBatches(meta.batches.map(batchPath))
     gcTick(force = true)
-    deleteBatches(hiddenEntries()) // half-written tmp dirs go too
+    deleteBatches(hiddenEntries()) // half-written compaction tmp dirs go too
     meta = meta.copy(highWater = 0L, removedCount = 0L, truncatedTimestamp = 0L,
       batchSeq = 0L, batches = Vector.empty)
     saveMeta()
@@ -604,8 +486,8 @@ final class Engine(
   private def dirBytes(p: Path): Long =
     Files.walk(p).iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
 
-  /** Dot-prefixed entries of the records dir: tmp dirs of rewrites and
-    * distributed inserts that never reached the manifest.
+  /** Dot-prefixed entries of the records dir: tmp dirs of compaction
+    * rewrites that never reached the manifest.
     */
   private def hiddenEntries(): Seq[Path] =
     Files.list(recordsDir).iterator().asScala
@@ -716,7 +598,7 @@ final class Engine(
   private def compactGroup(group: Seq[Batch]): Unit = {
     val newName = Engine.bumpGeneration(group.head.name)
     val tmp = recordsDir.resolve(s".compact_$newName.tmp")
-    readBatches(group)
+    readBatches(spark, dir, group)
       .coalesce(1)                 // one output file — no shuffle
       .sortWithinPartitions("id")  // id-sorted → row-group min/max pruning intact
       .write
@@ -751,7 +633,7 @@ final class Engine(
     *   3. Manifest entries whose dir vanished (manual deletion) are dropped.
     *   4. Entries without id ranges (a legacy names-only manifest) get them
     *      from their Parquet footers — driver-side, no Spark job.
-    *   5. Hidden (tmp) dirs are incomplete rewrites — deleted.
+    *   5. Hidden (tmp) dirs are incomplete compaction rewrites — deleted.
     */
   private def reconcileLog(): Unit = synchronized {
     val onDisk = Files.list(recordsDir).iterator().asScala
@@ -884,39 +766,51 @@ object Engine {
       e.isInstanceOf[java.io.FileNotFoundException] ||
       isEvictionRace(e.getCause))
 
-  /** Executor-side pass 1 of [[Engine.insertDistributed]]: parse, reject
-    * non-JSON / non-object lines, run the insertion filter (its
-    * record-altering helpers mutate the tree), serialize the survivor —
-    * WITHOUT an id, which only exists after the distributed rank pass. The
-    * AST ships in the closure (plain case classes); the Interp is built once
-    * per partition. Exactly mirrors the driver path in [[Engine.insert]].
+  /** Retry a materialized read that lost the race against retention or a
+    * compaction's GC: the read is re-planned against a fresh batch lookup —
+    * the analog of the reference reader skipping a removed partition and
+    * carrying on (native.go:745-755). Bounded: a persistent failure is a
+    * real error, not a race, and propagates.
     */
-  private[engine] def prepPartition(filterQ: Option[Ast.Query])(
-      it: Iterator[String]): Iterator[String] = {
-    val interp = filterQ.map(new Interp(_))
-    it.flatMap { json =>
-      JsonTree.tryParse(json) match {
-        case Some(m: JsonTree.Obj) if interp.forall(_.eval(m)) =>
-          Some(JsonTree.serialize(m))
-        case _ => None // non-JSON / non-object / filtered out — no id consumed
+  private[graft] def retryOnEvictionRace[T](f: => T): T = {
+    var attempt = 0
+    while (true) {
+      try return f
+      catch {
+        case e: Exception if attempt < 5 && isEvictionRace(e) => attempt += 1
       }
     }
+    throw new IllegalStateException("unreachable")
   }
 
-  /** Executor-side pass 2: inject the assigned 24-digit id (replacing an
-    * existing `id` key in place, appending otherwise — LinkedHashMap.put,
-    * same as the driver path) and lift the record's own `timestamp` over the
-    * batch insert time (reference: native.go:302-311).
+  /** A log record: id, ts (epoch millis) and the doc with its id injected. */
+  private[graft] val recordSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("ts", LongType, nullable = false),
+    StructField("doc", StringType, nullable = false)
+  ))
+
+  /** The records of `batches`, looked up in a manifest of the log at `dir`:
+    * the one batch reader of the engine and the live tail. Explicit batch
+    * paths, NOT a glob: a data directory containing glob metacharacters
+    * ([ ] { } * ?) must not change what the scan matches.
+    *
+    * Retention or compaction may remove a batch dir under a reader. A dir
+    * that vanishes between the lookup and planning fails the plan, and the
+    * lookup runs again. A file that vanishes after planning fails the read
+    * job (FAILED_READ_FILE), and each materialization site replans through
+    * [[isEvictionRace]]. A read never skips a missing file: that is right
+    * for retention (the rows were evicted) but loses rows a compaction only
+    * moved.
     */
-  private[engine] def buildRecordRow(doc: String, id: Long, now: Long): Row = {
-    val m = JsonTree.parse(doc).asInstanceOf[JsonTree.Obj]
-    m.put("id", indexToId(id))
-    val ts = m.get("timestamp") match {
-      case Some(l: Long) => l
-      case _             => now
+  private[graft] def readBatches(spark: SparkSession, dir: String,
+      batches: => Seq[Batch]): DataFrame =
+    retryOnEvictionRace {
+      val bs = batches
+      if (bs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), recordSchema)
+      else spark.read.schema(recordSchema)
+        .parquet(bs.map(b => Paths.get(dir, "records", b.name).toString): _*)
     }
-    Row(id, ts, JsonTree.serialize(m))
-  }
 
   /** Rows a `/fetch` step may read at most, once its first batch is in, and
     * ids one micro-batch of a live tail spans at most.
@@ -1016,6 +910,14 @@ object Engine {
   }
 
   object Meta {
+
+    /** The manifest committed in `dir`'s meta.json; empty for a new log. */
+    def load(dir: String): Meta = {
+      val p = Paths.get(dir, "meta.json")
+      if (Files.exists(p)) fromJson(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+      else Meta()
+    }
+
     def fromJson(s: String): Meta = {
       val m = JsonTree.parse(s).asInstanceOf[JsonTree.Obj]
       def longOf(o: JsonTree.Obj, k: String): Long = o.get(k) match {

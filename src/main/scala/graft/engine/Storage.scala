@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * | reference method              | here                                   |
   * |-------------------------------|----------------------------------------|
   * | Init / DumpCore / RestoreCore | constructor + durable meta.json        |
-  * | InsertData                    | insert / insertDistributed             |
+  * | InsertData                    | insert (one writer, like the storage   |
+  * |                               | mutex, native.go:266-334)              |
   * | ValidateQuery / PrepareQuery  | validate / expandMacros                |
   * | StreamRecords                 | scanWithFlags + the streaming tail     |
   * | RetrieveSingle                | single (the one batch covering the id) |
@@ -31,9 +32,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *
   * The wire benchmark's `TimedStorage` (`wirebench/.../Trace.scala`)
   * implements every method here and forwards each to the engine, so
-  * removing a method the server never calls (`records`, `query`,
-  * `queryExpanded`, `fetch`) breaks the benchmark's build; it has to change
-  * together with the benchmark.
+  * removing a method the server never calls (`insertDistributed`,
+  * `records`, `query`, `queryExpanded`, `fetch`) breaks the benchmark's
+  * build; it has to change together with the benchmark.
   */
 trait Storage {
 
@@ -44,7 +45,12 @@ trait Storage {
   def dir: String
 
   def insert(jsonDocs: Seq[String]): Seq[Long]
-  def insertDistributed(lines: Dataset[String], writeShards: Int = 4): Seq[Long]
+
+  /** [[insert]] of the collected `lines`; `writeShards` is ignored. Kept
+    * only because the wire benchmark's `TimedStorage` forwards it, so it
+    * goes together with a benchmark change.
+    */
+  def insertDistributed(lines: Dataset[String], writeShards: Int): Seq[Long]
 
   def records(): DataFrame
   def query(leftOff: String, queryStr: String): DataFrame

@@ -20,12 +20,15 @@ import graft.streaming.Streaming
   * `/query` streams history then keeps following new inserts (live tail).
   */
 final class ProtocolServer(engine: Storage, port: Int,
-    // the wire benchmark (wirebench/.../Main.scala) passes this positionally
-    // as `1`: removing it would silently rebind that argument to
-    // `maxLineChars` and still compile
+    // must be 1: the server has one insert path. The wire benchmark
+    // (wirebench/.../Main.scala) passes this positionally as `1`, so
+    // removing it would silently rebind that argument to `maxLineChars`
+    // and still compile; it goes together with a benchmark change
     ingestShards: Int = 1,
     maxLineChars: Int = ProtocolServer.MaxLineChars,
     bindAddr: String = "") {
+
+  require(ingestShards == 1, s"ingestShards must be 1, got $ingestShards")
 
   @volatile private var server: ServerSocket = _
   private val running = new AtomicBoolean(false)
@@ -137,15 +140,7 @@ final class ProtocolServer(engine: Storage, port: Int,
                 val more = readLineCapped(in)
                 if (more != null) batch += more
               }
-              // ingestShards > 1: executor-side parse/filter/write
-              // (Engine.insertDistributed) — same observable semantics,
-              // parallel pipeline; default stays the strict-parity
-              // driver-side single writer
-              if (ingestShards > 1) {
-                engine.insertDistributed(
-                  engine.spark.createDataset(batch.toSeq)(
-                    org.apache.spark.sql.Encoders.STRING), ingestShards)
-              } else engine.insert(batch.toSeq)
+              engine.insert(batch.toSeq)
             case "INSERTION_FILTER" =>
               engine.setInsertionFilter(line) match {
                 case Right(_) => send(out, "OK")

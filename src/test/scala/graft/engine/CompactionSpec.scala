@@ -143,6 +143,26 @@ class CompactionSpec extends AnyFunSuite {
     } finally e.close()
   }
 
+  test("no GC grace: a scan planned before the swap fails to be replanned, never drops rows") {
+    val dir = Files.createTempDirectory("graft-compact").toString
+    val e = compactingEngine(dir, keepRecent = 0)
+    try {
+      (0 until 8).foreach(b => e.insert((b * 5 until b * 5 + 5).map(n => s"""{"n":$n}""")))
+      // planned against the pre-swap manifest, materialized after its dirs go
+      val planned = Seq(e.records(), e.scanWithFlags("", "n >= 0"))
+      e.compactionTick()
+      assert(batchDirs(dir).length == 1, "compaction did not replace the planned dirs")
+      planned.foreach { df =>
+        scala.util.Try(df.collect().map(_.getLong(0)).sorted.toSeq) match {
+          case scala.util.Success(ids) => assert(ids == (0L until 40L), "rows lost")
+          case scala.util.Failure(err) =>
+            assert(Engine.isEvictionRace(err), s"not an eviction race: $err")
+        }
+      }
+      assert(e.records().count() == 40L)
+    } finally e.close()
+  }
+
   test("reconcile: an unacked (crashed mid-insert) orphan dir is dropped at open") {
     val dir = Files.createTempDirectory("graft-compact").toString
     val e = compactingEngine(dir)

@@ -299,42 +299,26 @@ class EngineSpec extends AnyFunSuite {
     assert(ids.toSeq == ((e.highWater - e.totalRecords) until e.highWater))
   }
 
-  test("insertDistributed matches the driver insert record-for-record") {
-    import org.apache.spark.sql.functions.col
-    val docs = Seq(
-      """{"brand":{"name":"Chevrolet"},"model":"Camaro","year":2021}""",
-      "NOT JSON", // rejected, consumes no id
-      """{"brand":{"name":"Ford"},"year":1999}""", // dropped by the filter
-      """[1,2,3]""", // non-object: rejected
-      """{"brand":{"name":"Chevrolet"},"timestamp":1700000000123}""", // ts lift
-      """{"brand":{"name":"Chevrolet"},"id":"replaced"}""" // id key replaced in place
-    )
-    val filter = """brand.name == "Chevrolet" and redact("model")"""
-    val a = freshEngine()
-    a.setInsertionFilter(filter)
-    val idsA = a.insert(docs)
-    val b = freshEngine()
-    b.setInsertionFilter(filter)
-    import spark.implicits._
-    val idsB = b.insertDistributed(docs.toDS(), writeShards = 3)
-    assert(idsA == idsB)
-    val rowsA = a.records().orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    val rowsB = b.records().orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    assert(rowsA.length == rowsB.length)
-    rowsA.zip(rowsB).foreach { case ((ia, tsa, da), (ib, tsb, db)) =>
-      assert(ia == ib)
-      assert(da == db, s"doc mismatch at id $ia")
-      // insert-time ts differs between the two runs; a record-carried
-      // timestamp must be lifted identically
-      if (da.contains("1700000000123")) assert(tsa == 1700000000123L && tsb == tsa)
-    }
-    assert(rowsB.exists(_._3.contains(""""model":"[REDACTED]"""")))
-    assert(rowsB.exists(_._3.contains(""""id":"000000000000000000000002"""")))
-    // a second distributed batch continues the id sequence
-    val idsB2 = b.insertDistributed(Seq(
-      """{"brand":{"name":"Chevrolet"}}""").toDS(), writeShards = 3)
-    assert(idsB2 == Seq(idsB.max + 1))
-    // query surface unaffected: filtered scan sees both batches
-    assert(b.query("", """brand.name == "Chevrolet"""").count() == rowsB.length + 1)
+  test("rejects take no id; timestamp lift; id replaced in place") {
+    val e = freshEngine()
+    assert(e.setInsertionFilter("""brand.name == "Chevrolet"""").isRight)
+    val t0 = System.currentTimeMillis()
+    val ids = e.insert(Seq(
+      "NOT JSON",
+      """[1,2,3]""", // non-object
+      """{"brand":{"name":"Ford"}}""", // dropped by the filter
+      """{"brand":{"name":"Chevrolet"},"timestamp":1700000000123}""",
+      """{"id":"replaced","brand":{"name":"Chevrolet"}}"""))
+    val t1 = System.currentTimeMillis()
+    assert(ids == Seq(0L, 1L))
+    val rows = e.records().orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+    // a record's own timestamp is its ts; otherwise the insert time
+    assert(rows.head == ((0L, 1700000000123L,
+      """{"brand":{"name":"Chevrolet"},"timestamp":1700000000123,"id":"000000000000000000000000"}""")))
+    assert(rows(1)._2 >= t0 && rows(1)._2 <= t1)
+    // an existing id key keeps its place and takes the assigned id
+    assert(rows(1)._3 == """{"id":"000000000000000000000001","brand":{"name":"Chevrolet"}}""")
+    e.close()
   }
 }

@@ -16,11 +16,6 @@ import graft.engine.Engine
   */
 class GoClientInteropSpec extends AnyFunSuite {
 
-  /** overridden by [[GoClientInteropShardedSpec]]: the replay must hold
-    * byte-for-byte when /insert runs the executor-side distributed pipeline
-    */
-  protected def ingestShards: Int = 1
-
   private lazy val spark = graft.Sessions
     .builder("local[4]", 4)
     .appName("goclient-spec")
@@ -47,7 +42,7 @@ class GoClientInteropSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     val dir = Files.createTempDirectory("graft-gointerop").toString
     val engine = new Engine(spark, dir)
-    val srv = new ProtocolServer(engine, 0, ingestShards)
+    val srv = new ProtocolServer(engine, 0)
     val port = srv.start()
     try {
       // TestLimit / TestMacro / TestInsertionFilter
@@ -175,12 +170,4 @@ class GoClientInteropSpec extends AnyFunSuite {
       assert(oneShot(port, "/reset") == "OK")
     } finally srv.stop()
   }
-}
-
-/** The same wire-for-wire replay with the 15k /insert burst routed through
-  * the executor-side distributed pipeline (4 write shards) — the pinned
-  * /metadata JSON, redaction visibility and id ordering must not move.
-  */
-class GoClientInteropShardedSpec extends GoClientInteropSpec {
-  override protected def ingestShards: Int = 4
 }

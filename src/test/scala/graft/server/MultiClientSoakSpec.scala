@@ -30,11 +30,6 @@ import graft.engine.Engine
   */
 class MultiClientSoakSpec extends AnyFunSuite {
 
-  /** overridden by [[MultiClientSoakShardedSpec]]: the same churn must hold
-    * when /insert routes through the executor-side distributed pipeline
-    */
-  protected def ingestShards: Int = 1
-
   private lazy val spark = graft.Sessions
     .builder("local[4]", 4)
     .appName("soak-spec")
@@ -84,7 +79,7 @@ class MultiClientSoakSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     val dir = Files.createTempDirectory("graft-soak").toString
     val engine = new Engine(spark, dir)
-    val srv = new ProtocolServer(engine, 0, ingestShards)
+    val srv = new ProtocolServer(engine, 0)
     val port = srv.start()
     try {
       // seeded history so each tail exercises the history phase too
@@ -199,13 +194,4 @@ class MultiClientSoakSpec extends AnyFunSuite {
       spark.streams.active.foreach(_.stop())
     }
   }
-}
-
-/** The same concurrent churn with /insert routed through the executor-side
-  * distributed pipeline (Engine.insertDistributed, 4 write shards): tails,
-  * ids, fetch pages and counts must be indistinguishable from the
-  * driver-writer run above.
-  */
-class MultiClientSoakShardedSpec extends MultiClientSoakSpec {
-  override protected def ingestShards: Int = 4
 }

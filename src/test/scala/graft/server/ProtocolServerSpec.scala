@@ -14,12 +14,6 @@ import graft.engine.Engine
   */
 class ProtocolServerSpec extends AnyFunSuite {
 
-  /** overridden by [[ProtocolServerShardedSpec]]: the whole matrix must be
-    * observably identical when /insert routes through the executor-side
-    * distributed pipeline instead of the driver single writer
-    */
-  protected def ingestShards: Int = 1
-
   private lazy val spark = graft.Sessions
     .builder("local[4]", 4)
     .appName("protocol-spec")
@@ -29,7 +23,10 @@ class ProtocolServerSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     val dir = Files.createTempDirectory("graft-proto").toString
     val engine = new Engine(spark, dir)
-    val srv = new ProtocolServer(engine, 0, ingestShards)
+    // the wire benchmark's exact positional form: the `1` lands in the
+    // third slot, so a server that took it as `maxLineChars` would reject
+    // every line of the matrix below
+    val srv = new ProtocolServer(engine, 0, 1, bindAddr = "127.0.0.1")
     val port = srv.start()
     try f(engine, port)
     finally srv.stop()
@@ -312,7 +309,7 @@ class ProtocolServerSpec extends AnyFunSuite {
     // deleted at the commit, with no grace for a reader planned before it
     val engine = new Engine(spark, dir, compactMinRun = 2, compactKeepRecent = 0,
       compactMinAgeMs = 0L, compactInBackground = false, gcGraceMs = 0L)
-    val srv = new ProtocolServer(engine, 0, ingestShards)
+    val srv = new ProtocolServer(engine, 0)
     val port = srv.start()
     def docs(round: Int) =
       (round * 20 until round * 20 + 20).map(i => s"""{"n":$i,"keep":${i % 2 == 0}}""")
@@ -429,7 +426,7 @@ class ProtocolServerSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     val dir = Files.createTempDirectory("graft-proto-cap").toString
     val engine = new Engine(spark, dir)
-    val srv = new ProtocolServer(engine, 0, ingestShards, maxLineChars = 1024)
+    val srv = new ProtocolServer(engine, 0, maxLineChars = 1024)
     val port = srv.start()
     try {
       val (s1, r1, w1) = connect(port)
@@ -442,8 +439,8 @@ class ProtocolServerSpec extends AnyFunSuite {
       val (s2, r2, w2) = connect(port)
       w2.println("/insert")
       w2.println(car)
-      // the sharded ingest path lands the insert asynchronously — poll with
-      // a bound instead of a fixed sleep (300 ms flaked under a loaded
+      // /insert sends no reply, so the insert lands asynchronously — poll
+      // with a bound instead of a fixed sleep (300 ms flaked under a loaded
       // full-suite run; the assertion is "it lands", not "it lands fast")
       val t0 = System.currentTimeMillis()
       while (engine.totalRecords < 1 &&
@@ -484,13 +481,11 @@ class ProtocolServerSpec extends AnyFunSuite {
       s3.close()
     }
   }
-}
 
-/** The full wire matrix again with /insert routed through the
-  * executor-side distributed pipeline (Engine.insertDistributed, 4 write
-  * shards): ids, fetch pages, filters and error replies must be
-  * byte-identical to the driver-writer run above.
-  */
-class ProtocolServerShardedSpec extends ProtocolServerSpec {
-  override protected def ingestShards: Int = 4
+  test("an ingestShards slot other than 1 is rejected") {
+    val engine = new Engine(spark, Files.createTempDirectory("graft-proto-shards").toString)
+    try {
+      Seq(0, 2, 4).foreach(n => intercept[IllegalArgumentException](new ProtocolServer(engine, 0, n)))
+    } finally engine.close()
+  }
 }

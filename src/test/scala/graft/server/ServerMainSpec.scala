@@ -18,9 +18,9 @@ class ServerMainSpec extends AnyFunSuite {
   test("full flag form parses like Go's flag package") {
     val got = ServerMain.parseArgs(Seq(
       "-addr", "127.0.0.1", "-port", "9177", "-debug", "-persistent",
-      "-storage", "parquet", "-storage-args", "/tmp/d", "-ingest-shards", "4"))
+      "-storage", "parquet", "-storage-args", "/tmp/d"))
     assert(got == Right(Config(addr = "127.0.0.1", port = 9177, debug = true,
-      persistent = true, storage = "parquet", dataDir = "/tmp/d", ingestShards = 4)))
+      persistent = true, storage = "parquet", dataDir = "/tmp/d")))
   }
 
   test("-name=value and --name forms are accepted") {
@@ -38,12 +38,18 @@ class ServerMainSpec extends AnyFunSuite {
     assert(ServerMain.parseArgs(Seq("-port", "abc")).isLeft)
     assert(ServerMain.parseArgs(Seq("-port")).isLeft)
     assert(ServerMain.parseArgs(Seq("-storage-args")).isLeft)
+    // the server has one insert path; the old sharding flag is unknown
+    assert(ServerMain.parseArgs(Seq("-ingest-shards", "4")) ==
+      Left("flag provided but not defined: -ingest-shards"))
   }
 
   test("legacy positional form still works") {
-    assert(ServerMain.parseArgs(Seq("9123", "/tmp/x", "2")) ==
-      Right(Config(port = 9123, dataDir = "/tmp/x", ingestShards = 2)))
+    assert(ServerMain.parseArgs(Seq("9123", "/tmp/x")) ==
+      Right(Config(port = 9123, dataDir = "/tmp/x")))
+    assert(ServerMain.parseArgs(Seq("9123")) == Right(Config(port = 9123)))
     assert(ServerMain.parseArgs(Seq("nope")).isLeft)
+    // [port] [dataDir] only: the old third (shard count) argument is an error
+    assert(ServerMain.parseArgs(Seq("9123", "/tmp/x", "2")).isLeft)
   }
 
   test("bind-addr server: loopback bind accepts loopback connections") {

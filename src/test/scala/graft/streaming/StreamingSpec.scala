@@ -5,7 +5,6 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -164,26 +163,47 @@ class StreamingSpec extends AnyFunSuite {
     } finally { q.stop(); meter.stop(); engine.close() }
   }
 
-  test("a multi-part batch from a distributed insert reaches the tail in id order") {
+  test("a micro-batch spanning several batch dirs of different sizes arrives in id order") {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-tail-parts").toString
-    val engine = new Engine(spark, dir)
+    val dir = Files.createTempDirectory("graft-tail-dirs").toString
+    val engine = new Engine(spark, dir, compactInBackground = false)
     engine.insert(Seq("""{"n":0}"""))
+    // later dirs are larger than earlier ones: Spark packs a task's files
+    // largest first, so only the drain's sort puts them in id order
+    var next = 1
+    Seq(5, 300, 20, 150).foreach { n =>
+      engine.insert((next until next + n).map(i => s"""{"n":$i}""")); next += n
+    }
+    val meter = new TailMeter
     val seen = mutable.ArrayBuffer[Long]()
+    // started after id 0 with every dir in place: one micro-batch reads all four
     val q = Streaming.startTailScan(spark, dir, "n >= 0", 0L,
       (rows, _) => seen.synchronized { seen ++= rows.map(_._1) })
     try {
       q.processAllAvailable()
-      val lines = spark.createDataset((1 to 400).map(i => s"""{"n":$i}"""))(Encoders.STRING)
-        .repartition(4)
-      assert(engine.insertDistributed(lines, writeShards = 4) == (1L to 400L))
-      val parts = Files.list(Paths.get(dir, "records", "batch_000000001")).iterator().asScala
-        .count(_.getFileName.toString.endsWith(".parquet"))
-      assert(parts > 1, s"the batch was written as $parts part file(s)")
-      q.processAllAvailable()
-      val ids = seen.synchronized(seen.toList)
-      assert(ids == (1L to 400L), "ids missing, repeated or out of order")
-    } finally { q.stop(); engine.close() }
+      assert(meter.of(q)._1 == Seq(next - 1L), "the dirs did not arrive in one micro-batch")
+      assert(seen.synchronized(seen.toList) == (1L until next.toLong), "ids missing, repeated or out of order")
+    } finally { q.stop(); meter.stop(); engine.close() }
+  }
+
+  test("tail and history of one /query project the same bytes") {
+    spark.sparkContext.setLogLevel("WARN")
+    val dir = Files.createTempDirectory("graft-tail-tier").toString
+    val engine = new Engine(spark, dir)
+    engine.insert((0 until 30).map(i => s"""{"n":$i,"keep":${i % 3 == 0},"s":"v$i"}"""))
+    Seq("""keep == true and redact("s")""", "keep == true and n > 5").foreach { query =>
+      val history = engine.scanWithFlags("", query).collect()
+        .map(r => (r.getLong(0), Option(r.getString(1)))).toList
+      assert(history.count(_._2.isDefined) > 0)
+      val seen = mutable.ArrayBuffer[(Long, Option[String])]()
+      val q = Streaming.startTailScan(spark, dir, query, -1L,
+        (rows, _) => seen.synchronized { seen ++= rows })
+      try {
+        q.processAllAvailable()
+        assert(seen.synchronized(seen.toList) == history, s"tail and history differ for $query")
+      } finally q.stop()
+    }
+    engine.close()
   }
 
   test("stateful sessionization closes sessions on gap and carries state across batches") {
